@@ -283,6 +283,18 @@ def haversine_m(lon1, lat1, lon2, lat2):
     return 2 * EARTH_MEAN_RADIUS_M * np.arcsin(np.minimum(1.0, np.sqrt(h)))
 
 
+def haversine_expr(lon1, lat1, lon2, lat2):
+    """``haversine_m`` as a Spark Column of pure Catalyst math (codegen,
+    no Python worker); arguments are Columns."""
+    from pyspark.sql import functions as F
+    rl1, rl2 = F.radians(lat1), F.radians(lat2)
+    dlat = (rl2 - rl1) / 2
+    dlon = (F.radians(lon2) - F.radians(lon1)) / 2
+    a = F.sin(dlat) ** 2 + F.cos(rl1) * F.cos(rl2) * F.sin(dlon) ** 2
+    # clamp: float rounding can push a epsilon past 1 for antipodes
+    return 2 * EARTH_MEAN_RADIUS_M * F.asin(F.least(F.lit(1.0), F.sqrt(a)))
+
+
 def vincenty_m(lon1, lat1, lon2, lat2, iterations: int = 200, tol: float = 1e-12):
     """Vectorized WGS84 ellipsoid inverse distance (Vincenty, meters).
 

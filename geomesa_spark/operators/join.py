@@ -6,7 +6,7 @@ scala/org/locationtech/geomesa/spark/GeoMesaJoinRelation.scala:41-91) as an
 idiomatic Spark plan:
 
     regions --(cover cells pUDF + explode)--> (cell, region)
-    points  --(cell_id pUDF)---------------> (cell, point)
+    points  --(cell_expr, native)----------> (cell, point)
     equi-join on cell  (broadcast-hash if regions are small: zero shuffle
                         of the big point side; sort-merge + AQE skew-join
                         otherwise)
@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, BooleanType, LongType
 
-from geomesa_spark.cells import PARTITION_RES, cell_id
+from geomesa_spark.cells import PARTITION_RES
 from geomesa_spark.geo import io as gio
 from geomesa_spark.geo import predicates as gp
 from geomesa_spark.plans.planner import cell_cover_of_geometry
@@ -104,12 +104,6 @@ def _flatten(geom):
 
 
 # ------------------------------------------------------------------ UDFs
-
-@F.pandas_udf(LongType())
-def udf_point_cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    return pd.Series(cell_id(lon.to_numpy(dtype=np.float64),
-                             lat.to_numpy(dtype=np.float64), PARTITION_RES))
-
 
 def udf_cover_cells(res: int):
     @F.pandas_udf(ArrayType(LongType()))

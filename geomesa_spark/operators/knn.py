@@ -9,9 +9,13 @@ empty — with exact geodesic meters and a per-query top-k.
 
 Spark shape: the (small) query set explodes to its window's cover cells and
 broadcast-joins the (huge) point table on the cell column — the big side is
-never shuffled; per-round work is partition-pruned to the union of query
-windows. Ranking is a window function (row_number over dist), the idiom the
-reference anticipates for host engines (SpatialRelationFunctions.scala:51).
+never shuffled. Each round still reads every file of the point table; no
+partition pruning reaches the scan. Ranking is a window function
+(row_number over dist), the idiom the reference anticipates for host
+engines (SpatialRelationFunctions.scala:51).
+``_ring_candidates`` is that join plus the distance refine, shared with
+proximity_join and tube_select; only the spheroid metric (Vincenty) runs
+a Python kernel, haversine is a codegen Catalyst expression.
 
 Exactness: a round's candidates provably include every point within w
 meters of the query (conservative deg-per-meter bounds); a query finishes
@@ -29,17 +33,10 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import DoubleType
 
 from geomesa_spark.cells import PARTITION_RES, bbox_cover
-from geomesa_spark.geo.measures import EARTH_MEAN_RADIUS_M
+from geomesa_spark.cells.native import cell_expr
+from geomesa_spark.geo.measures import EARTH_MEAN_RADIUS_M, haversine_expr
 
 _M_PER_DEG = math.pi / 180.0 * EARTH_MEAN_RADIUS_M  # ~111194.93
-
-
-@F.pandas_udf(DoubleType())
-def udf_haversine(lon1: pd.Series, lat1: pd.Series,
-                  lon2: pd.Series, lat2: pd.Series) -> pd.Series:
-    from geomesa_spark.geo.measures import haversine_m
-    return pd.Series(haversine_m(lon1.to_numpy(np.float64), lat1.to_numpy(np.float64),
-                                 lon2.to_numpy(np.float64), lat2.to_numpy(np.float64)))
 
 
 @F.pandas_udf(DoubleType())
@@ -58,8 +55,30 @@ def udf_spheroid(lon1: pd.Series, lat1: pd.Series,
 # latitude — up to R_mean/(b^2/a) ~= 1.0056x the sphere estimate — so
 # spheroid windows inflate by this slack before the cell cover (the
 # longitude bound already over-covers: it divides by R_mean < min nu).
-_METRIC_UDF = {"haversine": udf_haversine, "spheroid": udf_spheroid}
 _METRIC_WINDOW_SLACK = {"haversine": 1.0, "spheroid": 1.006}
+
+
+def _window_slack(metric: str) -> float:
+    if metric not in _METRIC_WINDOW_SLACK:
+        raise ValueError(f"unknown metric {metric!r}; "
+                         f"use one of {sorted(_METRIC_WINDOW_SLACK)}")
+    return _METRIC_WINDOW_SLACK[metric]
+
+
+def _ring_candidates(points: DataFrame, rings: DataFrame, *, lon: str,
+                     lat: str, res: int, metric: str) -> DataFrame:
+    """Candidate pairs of a ring search: broadcast the (query, ring cell)
+    frame ``rings`` — columns ``__cell__``, ``qlon``, ``qlat`` plus any
+    query columns the caller carries — against the point side on the
+    cell of (``lon``, ``lat``) at ``res``, a native Catalyst expression,
+    and add ``dist_m``. The big point side never shuffles."""
+    points = points.withColumn("__pc__", cell_expr(lon, lat, res))
+    dist = haversine_expr if metric == "haversine" else udf_spheroid
+    return (points.join(F.broadcast(rings),
+                        points["__pc__"] == rings["__cell__"])
+            .drop("__cell__", "__pc__")
+            .withColumn("dist_m", dist(F.col(lon), F.col(lat),
+                                       F.col("qlon"), F.col("qlat"))))
 
 
 def _window_cells(qlon: float, qlat: float, w_m: float, res: int) -> list[int]:
@@ -83,23 +102,18 @@ def _window_cells(qlon: float, qlat: float, w_m: float, res: int) -> list[int]:
 def _estimate_rows(df: DataFrame) -> int:
     """Cheap row-count estimate: sum parquet footer counts (driver-side
     metadata reads, sampled at 64 files) instead of a full table scan.
-    Falls back to ``df.count()`` for non-parquet / unreadable sources."""
-    try:
-        paths = []
-        for f in df.inputFiles():
-            if f.endswith(".parquet"):
-                from urllib.parse import unquote, urlparse
-                u = urlparse(f)
-                if u.scheme in ("", "file"):
-                    paths.append(unquote(u.path))
-        if paths:
-            import pyarrow.parquet as pq
-            sample = paths[:64]
-            n = sum(pq.ParquetFile(p).metadata.num_rows for p in sample)
-            return max(1, int(n * len(paths) / len(sample)))
-    except Exception:
-        pass
-    return df.count()
+    Falls back to ``df.count()`` only when the frame reads no local
+    parquet files (in-memory or non-parquet sources); a footer that
+    cannot be read raises."""
+    from urllib.parse import unquote, urlparse
+    paths = [unquote(u.path) for u in map(urlparse, df.inputFiles())
+             if u.path.endswith(".parquet") and u.scheme in ("", "file")]
+    if not paths:
+        return df.count()
+    import pyarrow.parquet as pq
+    sample = paths[:64]
+    n = sum(pq.ParquetFile(p).metadata.num_rows for p in sample)
+    return max(1, int(n * len(paths) / len(sample)))
 
 
 def knn_join(points: DataFrame, queries: list[tuple[str, float, float]],
@@ -128,10 +142,7 @@ def knn_join(points: DataFrame, queries: list[tuple[str, float, float]],
     re-executing earlier rounds' joins — ONE distributed job per round.
     Driver-side state stays O(|queries| * cover cells).
     """
-    if metric not in _METRIC_UDF:
-        raise ValueError(f"unknown metric {metric!r}; "
-                         f"use one of {sorted(_METRIC_UDF)}")
-    slack = _METRIC_WINDOW_SLACK[metric]
+    slack = _window_slack(metric)
     spark = points.sparkSession
     if initial_radius_m is None:
         n = estimated_count if estimated_count is not None \
@@ -143,11 +154,6 @@ def knn_join(points: DataFrame, queries: list[tuple[str, float, float]],
         # trivial) while queries in locally sparse areas finish in one
         # round instead of paying a whole extra scan round
         initial_radius_m = max(1000.0, 2.0 * r_deg * _M_PER_DEG)
-
-    has_prefix = "cell_prefix" in points.columns
-    pts = points if has_prefix \
-        else points.withColumn("__pc__", _cell_expr(lon, lat, res))
-    cell_col = "cell_prefix" if has_prefix else "__pc__"
 
     live = {qid: initial_radius_m for (qid, _, _) in queries}
     qpos = {qid: (qlon, qlat) for (qid, qlon, qlat) in queries}
@@ -170,9 +176,10 @@ def knn_join(points: DataFrame, queries: list[tuple[str, float, float]],
             rows += [(qid, qlon, qlat, c) for c in ring]
         if rows:
             qdf = spark.createDataFrame(
-                rows, "query_id string, qlon double, qlat double, cell long")
-            new_cand = _round_candidates(pts, qdf, lon, lat, cell_col,
-                                         has_prefix, metric=metric)
+                rows,
+                "query_id string, qlon double, qlat double, __cell__ long")
+            new_cand = _ring_candidates(points, qdf, lon=lon, lat=lat,
+                                        res=res, metric=metric)
             cand_acc = new_cand if cand_acc is None \
                 else cand_acc.unionByName(new_cand)
         if cand_acc is None:
@@ -232,21 +239,3 @@ def knn_join(points: DataFrame, queries: list[tuple[str, float, float]],
         return spark.createDataFrame([], "query_id string, rank int, dist_m double")
     return spark.createDataFrame(done_rows, out_schema)
 
-
-def _round_candidates(pts: DataFrame, qdf: DataFrame, lon: str, lat: str,
-                      cell_col: str, has_prefix: bool,
-                      metric: str = "haversine") -> DataFrame:
-    """One round's ring-scan: broadcast the (query, cell) frame against
-    the big point side — the big side never shuffles; the cell column is
-    the native Catalyst expression when the table lacks cell_prefix."""
-    dist = _METRIC_UDF[metric]
-    return (pts.join(F.broadcast(qdf), on=pts[cell_col] == qdf["cell"],
-                     how="inner")
-            .drop("cell", *([] if has_prefix else ["__pc__"]))
-            .withColumn("dist_m", dist(
-                F.col(lon), F.col(lat), F.col("qlon"), F.col("qlat"))))
-
-
-def _cell_expr(lon: str, lat: str, res: int):
-    from geomesa_spark.cells.native import cell_expr
-    return cell_expr(lon, lat, res)

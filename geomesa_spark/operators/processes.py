@@ -34,18 +34,7 @@ import re
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-EARTH_MEAN_RADIUS_M = 6371008.7714
-
-
-def haversine_expr(lon1, lat1, lon2, lat2,
-                   radius: float = EARTH_MEAN_RADIUS_M) -> Column:
-    """Great-circle distance in meters, pure Catalyst (codegen)."""
-    rl1, rl2 = F.radians(lat1), F.radians(lat2)
-    dlat = (rl2 - rl1) / 2
-    dlon = (F.radians(lon2) - F.radians(lon1)) / 2
-    a = F.sin(dlat) ** 2 + F.cos(rl1) * F.cos(rl2) * F.sin(dlon) ** 2
-    # clamp: float rounding can push a epsilon past 1 for antipodes
-    return 2 * radius * F.asin(F.least(F.lit(1.0), F.sqrt(a)))
+from geomesa_spark.geo.measures import haversine_expr
 
 
 def point2point(df: DataFrame, *, group: str, sort: str,

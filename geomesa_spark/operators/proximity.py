@@ -12,10 +12,11 @@ Reference semantics:
   tube/TubeSelectProcess.scala:37-133, TubeBuilder.scala).
 
 Spark shape: query geometries expand to cell windows (cover may
-over-select, never under-select), candidates come from an equi-join on
-the cell id (broadcast for small query sets), and the exact geodesic
-distance (+ time delta for tubes) refines — the same cover -> prune ->
-refine contract as the rest of the engine.
+over-select, never under-select), and ``knn._ring_candidates`` — the one
+candidate join of every ring search — broadcast-joins them to the points
+on the cell id and adds the geodesic distance; the distance (+ time delta
+for tubes) then refines — the same cover -> prune -> refine contract as
+the rest of the engine.
 """
 
 from __future__ import annotations
@@ -23,13 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from geomesa_spark.cells import PARTITION_RES
-from geomesa_spark.cells.native import cell_expr
 # _window_cells is the ONE radius-window cover implementation
 # (poleward-cos over-cover, antimeridian wrap via bbox_cover's split —
 # Envelope.toWorld semantics, KNearestNeighborSearchProcess.scala:524-544);
 # a second local copy here once diverged from it, so share it instead
-from geomesa_spark.operators.knn import (_METRIC_UDF, _METRIC_WINDOW_SLACK,
-                                         _window_cells, udf_haversine)
+from geomesa_spark.operators.knn import (_ring_candidates, _window_cells,
+                                         _window_slack)
 
 
 def proximity_join(points: DataFrame,
@@ -43,21 +43,14 @@ def proximity_join(points: DataFrame,
     Output: (query_id, <point columns>, dist_m), deduped per (query,
     point). Spheroid windows inflate by the documented slack before the
     cell cover so the candidate set still provably over-selects."""
-    if metric not in _METRIC_UDF:
-        raise ValueError(f"unknown metric {metric!r}; "
-                         f"use one of {sorted(_METRIC_UDF)}")
-    spark = points.sparkSession
-    w = radius_m * _METRIC_WINDOW_SLACK[metric]
-    cand_rows = [(qid, qlon, qlat, c)
-                 for (qid, qlon, qlat) in queries
-                 for c in _window_cells(qlon, qlat, w, res)]
-    cand = spark.createDataFrame(
-        cand_rows, "query_id string, qlon double, qlat double, __cell__ long")
-    pts = points.withColumn("__cell__", cell_expr(lon, lat, res))
-    joined = pts.join(F.broadcast(cand), "__cell__").drop("__cell__")
-    dist = _METRIC_UDF[metric](F.col(lon), F.col(lat),
-                               F.col("qlon"), F.col("qlat"))
-    return (joined.withColumn("dist_m", dist)
+    w = radius_m * _window_slack(metric)
+    rings = points.sparkSession.createDataFrame(
+        [(qid, qlon, qlat, c)
+         for (qid, qlon, qlat) in queries
+         for c in _window_cells(qlon, qlat, w, res)],
+        "query_id string, qlon double, qlat double, __cell__ long")
+    return (_ring_candidates(points, rings, lon=lon, lat=lat, res=res,
+                             metric=metric)
             .where(F.col("dist_m") <= radius_m)
             .drop("qlon", "qlat"))
 
@@ -73,23 +66,17 @@ def tube_select(events: DataFrame,
     row per matching event (deduped across overlapping vertices) with the
     nearest-vertex distance.
     """
-    spark = events.sparkSession
-    cand_rows = [(i, t, qlon, qlat, c)
-                 for i, (t, qlon, qlat) in enumerate(track)
-                 for c in _window_cells(qlon, qlat, radius_m, res)]
-    cand = spark.createDataFrame(
-        cand_rows,
+    rings = events.sparkSession.createDataFrame(
+        [(i, t, qlon, qlat, c)
+         for i, (t, qlon, qlat) in enumerate(track)
+         for c in _window_cells(qlon, qlat, radius_m, res)],
         "vertex int, qts string, qlon double, qlat double, __cell__ long") \
         .withColumn("qts", F.to_timestamp("qts"))
-    ev = events.withColumn("__cell__", cell_expr(lon, lat, res))
-    joined = ev.join(F.broadcast(cand), "__cell__").drop("__cell__")
-    dist = udf_haversine(F.col(lon), F.col(lat),
-                         F.col("qlon"), F.col("qlat"))
     # NTZ timestamps cannot cast straight to double; route via timestamp
     dt = F.abs(F.col(ts).cast("timestamp").cast("double")
                - F.col("qts").cast("timestamp").cast("double"))
-    hits = (joined.withColumn("dist_m", dist)
+    hits = (_ring_candidates(events, rings, lon=lon, lat=lat, res=res,
+                             metric="haversine")
             .where((F.col("dist_m") <= radius_m) & (dt <= dt_seconds)))
-    keys = [c for c in events.columns]
-    return (hits.groupBy(*keys)
+    return (hits.groupBy(*events.columns)
             .agg(F.min("dist_m").alias("dist_m")))

@@ -25,19 +25,9 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import LongType
 
-from geomesa_spark.cells import PARTITION_RES, cell_bounds, cell_id
+from geomesa_spark.cells import PARTITION_RES, cell_bounds
 from geomesa_spark.raster.codec import decode_image, mean_pool
-
-
-def udf_cell(res: int):
-    """Factory: (lon, lat) -> cell id at the given resolution."""
-    @F.pandas_udf(LongType())
-    def cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(cell_id(lon.to_numpy(dtype=np.float64),
-                                 lat.to_numpy(dtype=np.float64), res))
-    return cell
 
 
 def assign_tiles(df: DataFrame, *, lon: str = "lon", lat: str = "lat",

@@ -41,15 +41,13 @@ class TestJoinPlans:
         # cell column must be native bit math and the query frame must
         # broadcast against the unshuffled point side
         from geomesa_spark.cells import PARTITION_RES
-        from geomesa_spark.operators.knn import (_cell_expr,
-                                                 _round_candidates)
-        pts = entry._events_points(spark, SF).withColumn(
-            "__pc__", _cell_expr("lon", "lat", PARTITION_RES))
+        from geomesa_spark.operators.knn import _ring_candidates
+        pts = entry._events_points(spark, SF)
         qdf = spark.createDataFrame(
             [("q", 0.0, 0.0, 0)],
-            "query_id string, qlon double, qlat double, cell long")
-        plan = _plan(_round_candidates(pts, qdf, "lon", "lat", "__pc__",
-                                       has_prefix=False))
+            "query_id string, qlon double, qlat double, __cell__ long")
+        plan = _plan(_ring_candidates(pts, qdf, lon="lon", lat="lat",
+                                      res=PARTITION_RES, metric="haversine"))
         assert "shiftleft" in plan or "shiftright" in plan
         assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
         join_part = plan.split("BroadcastExchange")[0]
@@ -75,6 +73,37 @@ class TestCodegen:
     def test_z3_heatmap_is_pure_jvm(self, spark, entry):
         plan = _plan(entry.q_z3_heatmap(spark, SF))
         assert "EvalPython" not in plan
+
+    def test_cell_assignment_is_pure_jvm(self, spark, entry):
+        assert "EvalPython" not in _plan(entry.q_cell_assignment(spark, SF))
+
+    # ring searches share knn._ring_candidates; with the default metric
+    # its cell id and distance are Catalyst expressions, so no candidate
+    # plan crosses into a Python worker
+    def test_knn_rounds_are_pure_jvm(self, spark, entry, monkeypatch):
+        from geomesa_spark.operators import knn
+        real, seen = knn._ring_candidates, []
+
+        def record(*args, **kwargs):
+            seen.append(real(*args, **kwargs))
+            return seen[-1]
+
+        monkeypatch.setattr(knn, "_ring_candidates", record)
+        knn.knn_join(entry._events_points(spark, SF), entry.KNN_QUERIES[:2],
+                     entry.KNN_K).collect()
+        assert seen and all("EvalPython" not in _plan(df) for df in seen)
+
+    def test_proximity_is_pure_jvm(self, spark, entry):
+        from geomesa_spark.operators.proximity import proximity_join
+        df = proximity_join(entry._events_points(spark, SF),
+                            entry.PROX_QUERIES, entry.PROX_RADIUS)
+        assert "EvalPython" not in _plan(df)
+
+    def test_tube_select_is_pure_jvm(self, spark, entry):
+        from geomesa_spark.operators.proximity import tube_select
+        df = tube_select(entry._events_points_ts(spark, SF), entry.TUBE_TRACK,
+                         radius_m=entry.TUBE_RADIUS, dt_seconds=entry.TUBE_DT)
+        assert "EvalPython" not in _plan(df)
 
 
 class TestAggregates:
