@@ -124,25 +124,6 @@ def _udf(sig: str, ret, fn, *, skip_null: bool = True):
 
 # ------------------------------------------------- vectorized fast paths
 
-# DE-9IM predicates with a point-location fast path when one argument is
-# constant within the batch (a folded literal region — the common
-# ``WHERE st_contains(<wkt literal>, geom)`` shape). Maps predicate ->
-# (accepts(loc) for the directional case, which side must be the literal):
-# loc codes from locate_points_in_geometry: 1 interior, 0 boundary, -1 ext.
-_PRED_LITERAL_FIRST = {   # pred(literal_geom, point_col)
-    "st_contains": lambda loc: loc == 1,
-    "st_covers": lambda loc: loc >= 0,
-}
-_PRED_LITERAL_SECOND = {  # pred(point_col, literal_geom)
-    "st_within": lambda loc: loc == 1,
-}
-_PRED_SYMMETRIC = {       # either side literal
-    "st_intersects": lambda loc: loc >= 0,
-    "st_disjoint": lambda loc: loc == -1,
-    "st_touches": lambda loc: loc == 0,
-}
-
-
 def _const_wkb(series: pd.Series):
     """The single distinct non-null WKB blob of a batch, or None."""
     vals = {bytes(v) for v in series if v is not None}
@@ -150,18 +131,22 @@ def _const_wkb(series: pd.Series):
 
 
 def _fast_predicate(name: str, a: pd.Series, b: pd.Series):
-    """Vectorized evaluation when one side is batch-constant and the other
-    side decodes as plain points; returns None when inapplicable (caller
-    falls back to the per-row kernel). Exactness: identical point-location
-    arithmetic to the join refine (operators/join.py), which the join-vs-
-    cartesian oracles already pin down."""
-    from geomesa_spark.operators.join import locate_points_in_geometry
-
+    """Vectorized evaluation when one side is batch-constant (a folded
+    literal region — the common ``WHERE st_contains(<wkt literal>, geom)``
+    shape) and the other side decodes as plain points; returns None when
+    inapplicable (caller falls back to the per-row kernel). Exactness: the
+    point-location kernel and accepted-location table of
+    ``geo.predicates``, shared with the join refine, which the
+    join-vs-cartesian oracles already pin down."""
+    op = name.removeprefix("st_")
+    if op not in gp.POINT_LOCATIONS:
+        return None
+    # the literal is the region: op(region, point) for contains/covers,
+    # within(point, region), either side for the symmetric predicates
+    sides = "a" if op in ("contains", "covers") else \
+        "b" if op == "within" else "ab"
     for lit_side, col in (("a", b), ("b", a)):
-        accepts = _PRED_SYMMETRIC.get(name) or (
-            _PRED_LITERAL_FIRST.get(name) if lit_side == "a"
-            else _PRED_LITERAL_SECOND.get(name))
-        if accepts is None:
+        if lit_side not in sides:
             continue
         blob = _const_wkb(a if lit_side == "a" else b)
         if blob is None:
@@ -171,10 +156,8 @@ def _fast_predicate(name: str, a: pd.Series, b: pd.Series):
         null = np.array([v is None for v in vals])
         if np.any(np.isnan(x) & ~null):  # non-point rows: fall back
             continue
-        geom = gio.from_wkb(blob)
-        loc = locate_points_in_geometry(x, y, geom)
-        res = accepts(loc)
-        out = pd.Series(res, dtype=object)
+        loc = gp.locate_points_in_geometry(x, y, gio.from_wkb(blob))
+        out = pd.Series(gp.accepts_locations(op, loc), dtype=object)
         out[null | a.isna().to_numpy() | b.isna().to_numpy()] = None
         return out
     return None

@@ -198,6 +198,118 @@ def locate(g: Geometry, px: float, py: float) -> str:
     return best
 
 
+# ------------------------------------------------ point-vs-region predicates
+
+# Point locations each point-vs-region predicate accepts, read as
+# op(region, point); within/coveredBy read as op(point, region).
+POINT_LOCATIONS = {
+    "contains": "I", "within": "I",
+    "covers": "IB", "coveredBy": "IB", "intersects": "IB",
+    "disjoint": "E",
+    "touches": "B",
+}
+_LOCATION_CODES = {"I": 1, "B": 0, "E": -1}
+
+
+def accepts_locations(op: str, loc: np.ndarray) -> np.ndarray:
+    """Mask of the ``locate_points_in_geometry`` codes ``op`` accepts."""
+    return np.isin(loc, [_LOCATION_CODES[c] for c in POINT_LOCATIONS[op]])
+
+
+def locate_points_in_geometry(x: np.ndarray, y: np.ndarray, geom) -> np.ndarray:
+    """Vectorized ``locate`` of many points against one geometry.
+
+    Returns int8 array: 1 interior, 0 boundary, -1 exterior. Ray casting
+    over all rings at once; O(points x edges) numpy ops, no per-point python.
+    """
+    n = len(x)
+    out = np.full(n, -1, dtype=np.int8)
+    for part in flatten(geom):
+        if isinstance(part, Polygon) and not part.is_empty():
+            inside = np.zeros(n, dtype=bool)
+            boundary = np.zeros(n, dtype=bool)
+            for ri, ring in enumerate(part.rings()):
+                cross = np.zeros(n, dtype=bool)
+                ax, ay = ring[:-1, 0], ring[:-1, 1]
+                bx, by = ring[1:, 0], ring[1:, 1]
+                keep = ~((ax == bx) & (ay == by))
+                ax, ay, bx, by = ax[keep], ay[keep], bx[keep], by[keep]
+                for s in range(0, len(ax), 512):  # edge-chunk to bound memory
+                    a_x, a_y = ax[s:s + 512][None, :], ay[s:s + 512][None, :]
+                    b_x, b_y = bx[s:s + 512][None, :], by[s:s + 512][None, :]
+                    px, py = x[:, None], y[:, None]
+                    # boundary: collinear and within segment bbox
+                    orient = (b_x - a_x) * (py - a_y) - (b_y - a_y) * (px - a_x)
+                    on = (orient == 0.0) & (px >= np.minimum(a_x, b_x)) \
+                        & (px <= np.maximum(a_x, b_x)) \
+                        & (py >= np.minimum(a_y, b_y)) \
+                        & (py <= np.maximum(a_y, b_y))
+                    boundary |= on.any(axis=1)
+                    # ray cast to +x
+                    spans = (a_y > py) != (b_y > py)
+                    with np.errstate(divide="ignore", invalid="ignore"):
+                        xint = a_x + (py - a_y) * (b_x - a_x) / (b_y - a_y)
+                    hits = spans & (xint > px)
+                    cross ^= (hits.sum(axis=1) % 2).astype(bool)
+                if ri == 0:
+                    inside = cross
+                else:  # hole: inside hole -> exterior
+                    inside &= ~cross
+            out = np.maximum(out, np.where(boundary, np.int8(0),
+                                           np.where(inside, np.int8(1), np.int8(-1))))
+        else:
+            # non-polygon parts: exact per-row locate (rare side of a PIP join)
+            for i in range(n):
+                code = _LOCATION_CODES[locate(part, float(x[i]), float(y[i]))]
+                out[i] = max(out[i], code)
+    return out
+
+
+def _is_axis_rect(g) -> bool:
+    """True iff ``g`` is a non-degenerate axis-aligned rectangle — a
+    single-ring polygon whose ring is exactly its envelope. For such
+    geometries every point-vs-region predicate folds to closed or strict
+    coordinate comparisons against the envelope (``rect_column``), the
+    same decomposition the reference applies to bbox filters
+    (FilterHelper.extractGeometries / visitBinarySpatialOp)."""
+    if not isinstance(g, Polygon) or g.is_empty():
+        return False
+    rings = list(g.rings())
+    if len(rings) != 1:
+        return False
+    ring = rings[0]
+    if len(ring) != 5:
+        return False
+    xmin, ymin, xmax, ymax = g.bounds()
+    if not (xmax > xmin and ymax > ymin):
+        return False
+    corners = {(xmin, ymin), (xmin, ymax), (xmax, ymin), (xmax, ymax)}
+    if {(float(x), float(y)) for x, y in ring[:-1]} != corners:
+        return False
+    # The vertex SET alone admits a self-intersecting "bowtie" traversal
+    # of the same four corners (e.g. (0,0)->(1,1)->(1,0)->(0,1)), whose
+    # interior is NOT the envelope — require every edge axis-parallel,
+    # which together with four distinct corner vertices forces a proper
+    # rectangle ring in either winding order.
+    return all(ring[i][0] == ring[i + 1][0] or ring[i][1] == ring[i + 1][1]
+               for i in range(4))
+
+
+def rect_column(op: str, x0, y0, x1, y1, lon, lat):
+    """``op`` of a point (Spark Columns ``lon``, ``lat``) against the
+    rectangle ``[x0, x1] x [y0, y1]`` as a codegen Column expression.
+    Bounds are literals or Columns. Interior is the open rectangle,
+    interior-or-boundary the closed one."""
+    locs = POINT_LOCATIONS[op]
+    closed = (lon >= x0) & (lon <= x1) & (lat >= y0) & (lat <= y1)
+    if locs == "IB":
+        return closed
+    if locs == "E":
+        return ~closed
+    strict = (lon > x0) & (lon < x1) & (lat > y0) & (lat < y1)
+    return strict if locs == "I" else closed & ~strict
+
+
 def representative_point(poly: Polygon) -> tuple[float, float]:
     """A point strictly inside the polygon (horizontal-scanline method)."""
     ys = np.unique(np.concatenate([r[:, 1] for r in poly.rings()]))

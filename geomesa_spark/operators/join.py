@@ -5,12 +5,17 @@ sweeplineJoin, /root/reference/geomesa-spark/geomesa-spark-sql/src/main/
 scala/org/locationtech/geomesa/spark/GeoMesaJoinRelation.scala:41-91) as an
 idiomatic Spark plan:
 
-    regions --(cover cells pUDF + explode)--> (cell, region)
-    points  --(cell_expr, native)----------> (cell, point)
+    regions --(region_cover + explode)------> (cell, interior, envelope,
+                                               region)
+               one cached kernel, run on the driver for a broadcast
+               region side, as a pandas UDF on executors otherwise
+    points  --(cell_expr, native)-----------> (cell, point)
     equi-join on cell  (broadcast-hash if regions are small: zero shuffle
                         of the big point side; sort-merge + AQE skew-join
                         otherwise)
-    exact refine       (vectorized point-in-polygon over Arrow batches)
+    envelope filter    (codegen; exact for all-rectangle broadcast sides)
+    exact refine       (vectorized point location over Arrow batches,
+                        ``geo.predicates.locate_points_in_geometry``)
     dedupe             (only when both sides can span multiple cells --
                         duplication semantics of RelationUtils.gridIdMapper
                         :35-53 and its acknowledged duplicate TODO :38)
@@ -23,151 +28,95 @@ SparkSQLDataTest.scala:344-351).
 
 from __future__ import annotations
 
+import functools
 import weakref
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, BooleanType, LongType
+from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, LongType,
+                               StructField, StructType)
 
-from geomesa_spark.cells import PARTITION_RES
+from geomesa_spark.cells import PARTITION_RES, bbox_cover
 from geomesa_spark.geo import io as gio
 from geomesa_spark.geo import predicates as gp
-from geomesa_spark.plans.planner import cell_cover_of_geometry
+from geomesa_spark.geo.model import flatten
+from geomesa_spark.plans.planner import cell_cover_classified
 
-# predicate -> accepted point locations (I interior, B boundary) for
-# point-vs-region joins; key is predicate(region, point)
-_POINT_PREDICATES = {
-    "st_contains": frozenset("I"),
-    "st_within": frozenset("I"),      # within(point, region)
-    "st_covers": frozenset("IB"),
-    "st_coveredBy": frozenset("IB"),
-    "st_intersects": frozenset("IB"),
-}
+_ENV = ("xmin", "ymin", "xmax", "ymax")
 
 
-def locate_points_in_geometry(x: np.ndarray, y: np.ndarray, geom) -> np.ndarray:
-    """Vectorized point classification vs one geometry.
+# ------------------------------------------------------------------ covers
 
-    Returns int8 array: 1 interior, 0 boundary, -1 exterior. Ray casting
-    over all rings at once; O(points x edges) numpy ops, no per-point python.
-    """
-    from geomesa_spark.geo.model import Polygon
+@functools.lru_cache(maxsize=65536)
+def region_cover(wkb: bytes | None, res: int) -> tuple:
+    """The join cover of one region WKB at ``res``: ``(cells, envelope,
+    rect)``. ``cells`` is a non-empty tuple of ``(cell, interior)``; a
+    point joined through an INTERIOR cell is provably in the region's
+    interior (``cell_cover_classified``), so the exact refine is skipped
+    for it — the reference's contained-range shortcut applied to the
+    join. ``envelope`` is ``(xmin, ymin, xmax, ymax)`` and ``rect`` says
+    whether the region is an axis-aligned rectangle (``_is_axis_rect``).
 
-    n = len(x)
-    out = np.full(n, -1, dtype=np.int8)
-    for part in (p for p in _flatten(geom)):
-        if isinstance(part, Polygon) and not part.is_empty():
-            inside = np.zeros(n, dtype=bool)
-            boundary = np.zeros(n, dtype=bool)
-            for ri, ring in enumerate(part.rings()):
-                cross = np.zeros(n, dtype=bool)
-                ax, ay = ring[:-1, 0], ring[:-1, 1]
-                bx, by = ring[1:, 0], ring[1:, 1]
-                keep = ~((ax == bx) & (ay == by))
-                ax, ay, bx, by = ax[keep], ay[keep], bx[keep], by[keep]
-                for s in range(0, len(ax), 512):  # edge-chunk to bound memory
-                    a_x, a_y = ax[s:s + 512][None, :], ay[s:s + 512][None, :]
-                    b_x, b_y = bx[s:s + 512][None, :], by[s:s + 512][None, :]
-                    px, py = x[:, None], y[:, None]
-                    # boundary: collinear and within segment bbox
-                    orient = (b_x - a_x) * (py - a_y) - (b_y - a_y) * (px - a_x)
-                    on = (orient == 0.0) & (px >= np.minimum(a_x, b_x)) \
-                        & (px <= np.maximum(a_x, b_x)) \
-                        & (py >= np.minimum(a_y, b_y)) \
-                        & (py <= np.maximum(a_y, b_y))
-                    boundary |= on.any(axis=1)
-                    # ray cast to +x
-                    spans = (a_y > py) != (b_y > py)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        xint = a_x + (py - a_y) * (b_x - a_x) / (b_y - a_y)
-                    hits = spans & (xint > px)
-                    cross ^= (hits.sum(axis=1) % 2).astype(bool)
-                if ri == 0:
-                    inside = cross
-                else:  # hole: inside hole -> exterior
-                    inside &= ~cross
-            out = np.maximum(out, np.where(boundary, np.int8(0),
-                                           np.where(inside, np.int8(1), np.int8(-1))))
-        else:
-            # non-polygon parts: exact per-row locate (rare side of a PIP join)
-            for i in range(n):
-                loc = gp.locate(part, float(x[i]), float(y[i]))
-                code = 1 if loc == "I" else (0 if loc == "B" else -1)
-                out[i] = max(out[i], code)
-    return out
+    Regions whose scan cover is None — world-spanning, or past the
+    range budget, which bounds a partition IN-list rather than a join
+    explode — take the envelope's full bbox cover at ``res``, all
+    boundary cells. Null and empty regions get the reserved cell -1.
+    Cached per (WKB, res): region frames are static across queries, so
+    the per-geometry cover (~4 ms) is computed once per process."""
+    if wkb is None:  # matches nothing either way: keeps the rect path
+        return ((-1, False),), (None,) * 4, True
+    g = gio.from_wkb(wkb)
+    env = tuple(float(b) for b in g.bounds())
+    cells, interior = cell_cover_classified(g, res=res)
+    if cells is None:
+        cells = bbox_cover(*env, res=res, max_cells=4 ** res)
+        interior = np.zeros(len(cells), dtype=bool)
+    cover = tuple(zip(cells.tolist(), interior.tolist())) or ((-1, False),)
+    return cover, env, gp._is_axis_rect(g)
 
 
-def _flatten(geom):
-    from geomesa_spark.geo.model import flatten
-    return flatten(geom)
+_COVER_TYPE = StructType(
+    [StructField("cells", ArrayType(StructType([
+        StructField("cell", LongType()),
+        StructField("interior", BooleanType())])))]
+    + [StructField(b, DoubleType()) for b in _ENV])
+
+
+def udf_region_cover(res: int):
+    """``region_cover`` as a pandas UDF: struct of the ``cells`` array
+    (``cell``, ``interior``) and the envelope ``xmin .. ymax``."""
+    @F.pandas_udf(_COVER_TYPE)
+    def cover(wkb: pd.Series) -> pd.DataFrame:
+        rows = []
+        for v in wkb:
+            cells, env, _ = region_cover(None if v is None else bytes(v), res)
+            rows.append((list(cells), *env))
+        return pd.DataFrame(rows, columns=["cells", *_ENV])
+    return cover
+
+
+def _explode_cover(df: DataFrame, geom: str, res: int,
+                   tag: str = "") -> DataFrame:
+    """``df`` exploded to one row per cover cell of ``geom``, with
+    ``__<tag>cell__``, ``__<tag>int__`` and the envelope
+    ``__<tag>xmin__ .. __<tag>ymax__``. ``explode_outer`` equals
+    ``explode`` here (a cover is never empty) but keeps Catalyst from
+    inferring a ``size(cells) > 0`` filter that evaluates the UDF twice."""
+    out = df.withColumn("__cov__", udf_region_cover(res)(F.col(geom))) \
+        .withColumn("__c__", F.explode_outer("__cov__.cells")) \
+        .withColumn(f"__{tag}cell__", F.col("__c__.cell")) \
+        .withColumn(f"__{tag}int__", F.col("__c__.interior"))
+    for b in _ENV:
+        out = out.withColumn(f"__{tag}{b}__", F.col(f"__cov__.{b}"))
+    return out.drop("__cov__", "__c__")
 
 
 # ------------------------------------------------------------------ UDFs
 
-def udf_cover_cells(res: int):
-    @F.pandas_udf(ArrayType(LongType()))
-    def cover(wkb: pd.Series) -> pd.Series:
-        memo: dict[bytes, list[int]] = {}
-        out = []
-        for v in wkb:
-            if v is None:
-                out.append([-1])
-                continue
-            key = bytes(v)
-            c = memo.get(key)
-            if c is None:
-                g = gio.from_wkb(key)
-                cov = cell_cover_of_geometry(g, res=res)
-                c = [-1] if cov is None or len(cov) == 0 else [int(i) for i in cov]
-                memo[key] = c
-            out.append(c)
-        return pd.Series(out)
-    return cover
-
-
-def udf_cover_cells_classified(res: int):
-    """Cover cells tagged interior/boundary (cell_cover_classified): a
-    point joined through an INTERIOR cell is provably in the region's
-    interior, so the exact refine is skipped for it — the reference's
-    contained-range shortcut applied to the join."""
-    from pyspark.sql.types import StructField, StructType
-
-    from geomesa_spark.plans.planner import cell_cover_classified
-
-    schema = ArrayType(StructType([
-        StructField("cell", LongType()),
-        StructField("interior", BooleanType())]))
-
-    @F.pandas_udf(schema)
-    def cover(wkb: pd.Series) -> pd.Series:
-        memo: dict[bytes, list] = {}
-        out = []
-        for v in wkb:
-            if v is None:
-                out.append([(-1, False)])
-                continue
-            key = bytes(v)
-            c = memo.get(key)
-            if c is None:
-                g = gio.from_wkb(key)
-                cov, interior = cell_cover_classified(g, res=res)
-                if cov is None or len(cov) == 0:
-                    c = [(-1, False)]
-                else:
-                    c = [(int(cell), bool(i))
-                         for cell, i in zip(cov, interior)]
-                memo[key] = c
-            out.append(c)
-        return pd.Series(out)
-    return cover
-
-
-def udf_refine_point(predicate: str):
-    accepted = _POINT_PREDICATES[predicate]
-    want_i = "I" in accepted
-    want_b = "B" in accepted
-
+def udf_refine_point(op: str):
+    """Exact point-vs-region refine: the point locations ``op`` accepts
+    (``geo.predicates.POINT_LOCATIONS``)."""
     @F.pandas_udf(BooleanType())
     def refine(lon: pd.Series, lat: pd.Series, wkb: pd.Series) -> pd.Series:
         x = lon.to_numpy(dtype=np.float64)
@@ -178,60 +127,11 @@ def udf_refine_point(predicate: str):
                                               else b), use_na_sentinel=True)
         for gi, blob in enumerate(uniques):
             sel = codes == gi
-            geom = gio.from_wkb(blob)
-            loc = locate_points_in_geometry(x[sel], y[sel], geom)
-            ok = np.zeros(int(sel.sum()), dtype=bool)
-            if want_i:
-                ok |= loc == 1
-            if want_b:
-                ok |= loc == 0
-            out[sel] = ok
+            loc = gp.locate_points_in_geometry(x[sel], y[sel],
+                                               gio.from_wkb(blob))
+            out[sel] = gp.accepts_locations(op, loc)
         return pd.Series(out)
     return refine
-
-
-_PAIR_PREDICATES = ("st_contains", "st_within", "st_covers", "st_coveredBy",
-                    "st_intersects", "st_overlaps", "st_touches",
-                    "st_crosses", "st_equals")
-
-
-def udf_cover_cells_bbox(res: int):
-    """Cover cells plus the geometry envelope in one parse (memoized per
-    distinct WKB). The envelope columns let the pair join push a bbox
-    pre-reject into the JVM join condition — candidate pairs that can't
-    satisfy the predicate are dropped inside whole-stage codegen and
-    never cross the Arrow boundary (the in-cell candidate pruning the
-    reference's sweepline gets from its per-cell x-interval index,
-    GeoMesaJoinRelation.sweeplineJoin:41-55)."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType([
-        StructField("cells", ArrayType(LongType())),
-        StructField("xmin", DoubleType()), StructField("ymin", DoubleType()),
-        StructField("xmax", DoubleType()), StructField("ymax", DoubleType())])
-
-    @F.pandas_udf(schema)
-    def cover(wkb: pd.Series) -> pd.DataFrame:
-        memo: dict[bytes, tuple] = {}
-        rows = []
-        for v in wkb:
-            if v is None:
-                rows.append(([-1], None, None, None, None))
-                continue
-            key = bytes(v)
-            c = memo.get(key)
-            if c is None:
-                g = gio.from_wkb(key)
-                cov = cell_cover_of_geometry(g, res=res)
-                cells = [-1] if cov is None or len(cov) == 0 \
-                    else [int(i) for i in cov]
-                x0, y0, x1, y1 = g.bounds()
-                c = (cells, float(x0), float(y0), float(x1), float(y1))
-                memo[key] = c
-            rows.append(c)
-        return pd.DataFrame(rows, columns=["cells", "xmin", "ymin",
-                                           "xmax", "ymax"])
-    return cover
 
 
 def _geom_vertices(geom) -> np.ndarray:
@@ -241,7 +141,7 @@ def _geom_vertices(geom) -> np.ndarray:
     from geomesa_spark.geo.model import LineString, Point, Polygon
 
     chunks = []
-    for part in _flatten(geom):
+    for part in flatten(geom):
         if isinstance(part, Polygon) and not part.is_empty():
             for ring in part.rings():
                 chunks.append(ring[:-1])
@@ -274,8 +174,8 @@ def _screen_vertex_locations(pair_idx: list[int], containers: list,
                 out[i] = np.zeros(0, dtype=np.int8)
             continue
         stacked = np.concatenate([v for v in verts if len(v)], axis=0)
-        loc = locate_points_in_geometry(stacked[:, 0], stacked[:, 1],
-                                        geom)
+        loc = gp.locate_points_in_geometry(stacked[:, 0], stacked[:, 1],
+                                           geom)
         offs = np.cumsum([0] + lens)
         for j, i in enumerate(idxs):
             out[i] = loc[offs[j]:offs[j + 1]]
@@ -399,13 +299,6 @@ def udf_refine_pairs(predicate: str):
 
 # ------------------------------------------------------------- public API
 
-# cross-query cover/envelope memo for the driver-side broadcast explode:
-# region dims are static (the same frame feeds every query of a session),
-# so the per-geometry cover computation (~4 ms each) is a plan-cache hit
-# after the first query. Bounded like a plan cache; entries are tiny.
-_DRIVER_COVER_MEMO: dict[tuple[bytes, int], tuple[list, tuple]] = {}
-_DRIVER_COVER_MEMO_CAP = 65536
-
 # frame-level memo: when the SAME region DataFrame object is joined
 # repeatedly (dim tables held by an application, bench rounds), the
 # collect + local-relation build (two driver round-trips, ~0.5 s of
@@ -415,42 +308,9 @@ _DRIVER_COVER_FRAMES: "weakref.WeakKeyDictionary[DataFrame, dict]" = \
     weakref.WeakKeyDictionary()
 
 
-def _is_axis_rect(g) -> bool:
-    """True iff ``g`` is a non-degenerate axis-aligned rectangle — a
-    single-ring polygon whose ring is exactly its envelope. For such
-    geometries every point-vs-region DE-9IM predicate folds to closed or
-    strict coordinate comparisons against the envelope, so the exact
-    refine can be evaluated entirely in whole-stage codegen (the same
-    decomposition the reference applies to bbox filters,
-    FilterHelper.extractGeometries / visitBinarySpatialOp)."""
-    from geomesa_spark.geo.model import Polygon
-
-    if not isinstance(g, Polygon) or g.is_empty():
-        return False
-    rings = list(g.rings())
-    if len(rings) != 1:
-        return False
-    ring = rings[0]
-    if len(ring) != 5:
-        return False
-    xmin, ymin, xmax, ymax = g.bounds()
-    if not (xmax > xmin and ymax > ymin):
-        return False
-    corners = {(xmin, ymin), (xmin, ymax), (xmax, ymin), (xmax, ymax)}
-    if {(float(x), float(y)) for x, y in ring[:-1]} != corners:
-        return False
-    # The vertex SET alone admits a self-intersecting "bowtie" traversal
-    # of the same four corners (e.g. (0,0)->(1,1)->(1,0)->(0,1)), whose
-    # interior is NOT the envelope — require every edge axis-parallel,
-    # which together with four distinct corner vertices forces a proper
-    # rectangle ring in either winding order.
-    return all(ring[i][0] == ring[i + 1][0] or ring[i][1] == ring[i + 1][1]
-               for i in range(4))
-
-
 def _driver_cover_explode(regions: DataFrame, region_geom: str,
                           res: int) -> tuple[DataFrame, bool]:
-    """Cover-cell explode of a TO-BE-BROADCAST region side, computed on
+    """``_explode_cover`` of a TO-BE-BROADCAST region side, computed on
     the driver. Returns ``(frame, all_rect)``.
 
     Scale contract: callers reach this only with ``broadcast_regions=
@@ -458,57 +318,32 @@ def _driver_cover_explode(regions: DataFrame, region_geom: str,
     executor memory — Spark's BroadcastExchange performs exactly this
     collect itself to build the broadcast relation, so no new memory or
     distribution assumption is introduced. The result is a local
-    relation carrying the original columns plus (``__cell__``,
-    ``__int__``) and the geometry envelope (``__xmin__ .. __ymax__``,
-    folded into a codegen bbox pre-filter ahead of the Python refine),
-    identical row-for-row to the distributed
-    ``udf_cover_cells_classified`` + explode plan. ``all_rect`` is True
-    when every non-null geometry is an axis-aligned rectangle
-    (``_is_axis_rect``), in which case the envelope columns are not
-    merely necessary but EXACT and the caller may skip the Python
-    refine stage altogether."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from geomesa_spark.plans.planner import cell_cover_classified
-
+    relation with the same columns as the distributed explode.
+    ``all_rect`` is True when every non-null geometry is an axis-aligned
+    rectangle, in which case the envelope columns are not merely
+    necessary but EXACT and the caller may skip the Python refine stage
+    altogether."""
     frame_memo = _DRIVER_COVER_FRAMES.setdefault(regions, {})
     cached = frame_memo.get((region_geom, res))
     if cached is not None:
         return cached
-
-    spark = regions.sparkSession
     all_rect = True
     out_rows = []
     for row in regions.collect():
         d = row.asDict()
         v = d[region_geom]
-        key = (bytes(v), res) if v is not None else None
-        hit = _DRIVER_COVER_MEMO.get(key) if key is not None else None
-        if hit is None:
-            if key is None:
-                c, env, rect = [(-1, False)], (None,) * 4, True
-            else:
-                g = gio.from_wkb(key[0])
-                cov, interior = cell_cover_classified(g, res=res)
-                c = ([(-1, False)] if cov is None or len(cov) == 0 else
-                     [(int(cell), bool(i)) for cell, i in zip(cov, interior)])
-                env = tuple(float(b) for b in g.bounds())
-                rect = _is_axis_rect(g)
-                if len(_DRIVER_COVER_MEMO) < _DRIVER_COVER_MEMO_CAP:
-                    _DRIVER_COVER_MEMO[key] = (c, env, rect)
-        else:
-            c, env, rect = hit
+        cells, env, rect = region_cover(None if v is None else bytes(v), res)
         all_rect = all_rect and rect
-        for cell, interior in c:
+        envd = {f"__{b}__": e for b, e in zip(_ENV, env)}
+        for cell, interior in cells:
             out_rows.append({**d, "__cell__": cell, "__int__": interior,
-                             "__xmin__": env[0], "__ymin__": env[1],
-                             "__xmax__": env[2], "__ymax__": env[3]})
+                             **envd})
     schema = StructType(list(regions.schema.fields)
                         + [StructField("__cell__", LongType()),
                            StructField("__int__", BooleanType())]
                         + [StructField(f"__{b}__", DoubleType())
-                           for b in ("xmin", "ymin", "xmax", "ymax")])
-    out = spark.createDataFrame(out_rows, schema)
+                           for b in _ENV])
+    out = regions.sparkSession.createDataFrame(out_rows, schema)
     frame_memo[(region_geom, res)] = (out, all_rect)
     return out, all_rect
 
@@ -531,12 +366,12 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     reference's shard strategy (ShardStrategy.scala:42-80). Prefer AQE
     skew-join; use salt for pathological hot cells.
     """
-    if predicate not in _POINT_PREDICATES:
+    op = predicate.removeprefix("st_")
+    if "I" not in gp.POINT_LOCATIONS.get(op, ""):
         raise ValueError(f"unsupported point-join predicate {predicate}")
     from geomesa_spark.cells.native import cell_expr
     pts = points.withColumn("__cell__",
                             cell_expr(point_lon, point_lat, res))
-    all_rect = False
     if broadcast_regions:
         # Explicit-broadcast build side: BroadcastExchange collects this
         # frame to the driver regardless, so computing the cover cells
@@ -547,85 +382,54 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
         # explode below remains the path for large (shuffled) region sides.
         reg, all_rect = _driver_cover_explode(regions, region_geom, res)
     else:
-        reg = regions.withColumn(
-            "__cells__", udf_cover_cells_classified(res)(F.col(region_geom))) \
-            .withColumn("__c__", F.explode("__cells__")) \
-            .withColumn("__cell__", F.col("__c__.cell")) \
-            .withColumn("__int__", F.col("__c__.interior")) \
-            .drop("__cells__", "__c__")
+        reg, all_rect = _explode_cover(regions, region_geom, res), False
+    aux = ["__cell__", "__int__", *(f"__{b}__" for b in _ENV)]
     if salt and salt > 1:
         reg = reg.withColumn("__salt__", F.explode(F.array(
             *[F.lit(i) for i in range(salt)])))
         pts = pts.withColumn("__salt__", F.pmod(F.xxhash64(point_lon, point_lat),
                                                 F.lit(salt)).cast("int"))
         join_keys = ["__cell__", "__salt__"]
+        aux.append("__salt__")
     else:
         join_keys = ["__cell__"]
     if broadcast_regions:
         reg = F.broadcast(reg)
     joined = pts.join(reg, on=join_keys, how="inner")
-    has_env = "__xmin__" in joined.columns
+    lon, lat = F.col(point_lon), F.col(point_lat)
+    env = [F.col(f"__{b}__") for b in _ENV]
     if all_rect:
         # every broadcast geometry is an axis-aligned rectangle: the
         # exact predicate IS a coordinate comparison against the stored
-        # envelope (strict for interior-only predicates, closed when the
-        # boundary is accepted) — the whole join evaluates in
-        # whole-stage codegen with NO Python refine stage in the plan
-        strict = _POINT_PREDICATES[predicate] == frozenset("I")
-        lo = F.col(point_lon) > F.col("__xmin__") if strict \
-            else F.col(point_lon) >= F.col("__xmin__")
-        hi = F.col(point_lon) < F.col("__xmax__") if strict \
-            else F.col(point_lon) <= F.col("__xmax__")
-        blo = F.col(point_lat) > F.col("__ymin__") if strict \
-            else F.col(point_lat) >= F.col("__ymin__")
-        bhi = F.col(point_lat) < F.col("__ymax__") if strict \
-            else F.col(point_lat) <= F.col("__ymax__")
-        out = joined.where(lo & hi & blo & bhi)
-        return out.drop("__cell__", "__int__", "__xmin__", "__ymin__",
-                        "__xmax__", "__ymax__",
-                        *(["__salt__"] if salt and salt > 1 else []))
-    if has_env:
-        # closed-interval envelope containment is NECESSARY for every
-        # accepted point location (I and B are both inside the closed
-        # envelope), so this whole-stage-codegen filter rejects the bulk
-        # of the cell-join candidates before they reach the Arrow/Python
-        # refine stage — same discipline as the pair-join's
-        # _pair_bbox_condition
-        joined = joined.where(
-            F.col("__xmin__").isNull() | (
-                (F.col(point_lon) >= F.col("__xmin__"))
-                & (F.col(point_lon) <= F.col("__xmax__"))
-                & (F.col(point_lat) >= F.col("__ymin__"))
-                & (F.col(point_lat) <= F.col("__ymax__"))))
-    refine = udf_refine_point(predicate)
+        # envelope — the whole join evaluates in whole-stage codegen with
+        # NO Python refine stage in the plan
+        return joined.where(gp.rect_column(op, *env, lon, lat)).drop(*aux)
+    # closed-interval envelope containment is NECESSARY for every
+    # accepted point location (I and B are both inside the closed
+    # envelope), so this whole-stage-codegen filter rejects the bulk of
+    # the cell-join candidates before they reach the Arrow/Python refine
+    # stage — same discipline as the pair-join's _pair_bbox_condition.
+    # The isNull arm only keeps Catalyst from inferring not-null filters
+    # on the envelope, which it would push below the explode as a second
+    # cover-UDF evaluation; null regions still fail the refine.
+    joined = joined.where(env[0].isNull()
+                          | gp.rect_column("intersects", *env, lon, lat))
     # a point joined through an INTERIOR cover cell is provably at
-    # location 'I', so the shortcut is valid only for predicates that
-    # accept interior points (all current ones do — the guard keeps a
-    # future boundary-only predicate, e.g. st_touches, correct): accept
-    # without the exact refine, and null the WKB argument so those rows
-    # cross the Arrow boundary payload-free and skip the ray casting
-    if "I" in _POINT_PREDICATES[predicate]:
-        out = joined.where(F.when(F.col("__int__"), F.lit(True)).otherwise(
-            refine(F.col(point_lon), F.col(point_lat),
-                   F.when(F.col("__int__"), F.lit(None))
-                   .otherwise(F.col(region_geom)))))
-    else:
-        out = joined.where(refine(F.col(point_lon), F.col(point_lat),
-                                  F.col(region_geom)))
-    drop = ["__cell__", "__int__"] \
-        + (["__salt__"] if salt and salt > 1 else []) \
-        + (["__xmin__", "__ymin__", "__xmax__", "__ymax__"]
-           if has_env else [])
-    return out.drop(*drop)
+    # location 'I', which every join predicate accepts: accept without
+    # the exact refine, and null the WKB argument so those rows cross the
+    # Arrow boundary payload-free and skip the ray casting
+    interior = F.col("__int__")
+    refine = udf_refine_point(op)(
+        lon, lat, F.when(interior, F.lit(None)).otherwise(F.col(region_geom)))
+    return joined.where(F.when(interior, F.lit(True)).otherwise(refine)) \
+        .drop(*aux)
 
 
 def _pair_bbox_condition(predicate: str):
     """JVM-side envelope necessary-condition for a geometry-pair
-    predicate, over the stored cover-UDF bbox columns."""
-    lx0, ly0 = F.col("__lx0__"), F.col("__ly0__")
-    lx1, ly1 = F.col("__lx1__"), F.col("__ly1__")
-    rx0, ry0 = F.col("__rx0__"), F.col("__ry0__")
-    rx1, ry1 = F.col("__rx1__"), F.col("__ry1__")
+    predicate, over the exploded cover's envelope columns."""
+    lx0, ly0, lx1, ly1 = (F.col(f"__l{b}__") for b in _ENV)
+    rx0, ry0, rx1, ry1 = (F.col(f"__r{b}__") for b in _ENV)
     if predicate in ("st_contains", "st_covers"):
         return (lx0 <= rx0) & (ly0 <= ry0) & (lx1 >= rx1) & (ly1 >= ry1)
     if predicate in ("st_within", "st_coveredBy"):
@@ -643,21 +447,8 @@ def _pair_candidates(left: DataFrame, right: DataFrame, *,
     """Candidate pairs of the cell equi-join AFTER the JVM envelope
     pre-reject but BEFORE the exact Python refine — exposed so tests can
     assert the exact-predicate workload is ≪ n² on dense cells."""
-    cover = udf_cover_cells_bbox(res)
-    lf = (left.withColumn("__cb__", cover(F.col(left_geom)))
-              .withColumn("__lcell__", F.explode("__cb__.cells"))
-              .withColumn("__lx0__", F.col("__cb__.xmin"))
-              .withColumn("__ly0__", F.col("__cb__.ymin"))
-              .withColumn("__lx1__", F.col("__cb__.xmax"))
-              .withColumn("__ly1__", F.col("__cb__.ymax"))
-              .drop("__cb__"))
-    rf = (right.withColumn("__cb__", cover(F.col(right_geom)))
-               .withColumn("__rcell__", F.explode("__cb__.cells"))
-               .withColumn("__rx0__", F.col("__cb__.xmin"))
-               .withColumn("__ry0__", F.col("__cb__.ymin"))
-               .withColumn("__rx1__", F.col("__cb__.xmax"))
-               .withColumn("__ry1__", F.col("__cb__.ymax"))
-               .drop("__cb__"))
+    lf = _explode_cover(left, left_geom, res, tag="l")
+    rf = _explode_cover(right, right_geom, res, tag="r")
     if broadcast_right:
         rf = F.broadcast(rf)
     cond = (F.col("__lcell__") == F.col("__rcell__")) \
@@ -665,9 +456,8 @@ def _pair_candidates(left: DataFrame, right: DataFrame, *,
     return lf.join(rf, on=cond, how="inner")
 
 
-_PAIR_AUX_COLS = ["__lcell__", "__rcell__",
-                  "__lx0__", "__ly0__", "__lx1__", "__ly1__",
-                  "__rx0__", "__ry0__", "__rx1__", "__ry1__"]
+_PAIR_AUX_COLS = [f"__{side}{c}__" for side in "lr"
+                  for c in ("cell", "int", *_ENV)]
 
 
 def spatial_join_pairs(left: DataFrame, right: DataFrame, *,

@@ -42,10 +42,13 @@ def assign_tiles_footprint(df: DataFrame, *, wkb_col: str = "geom",
                            res: int = PARTITION_RES,
                            tile_col: str = "tile") -> DataFrame:
     """Footprint path: explode into every intersecting tile (duplication
-    semantics of gridIdMapper; consumers dedupe on (id, tile) pairs)."""
-    from geomesa_spark.operators.join import udf_cover_cells
-    return df.withColumn(tile_col,
-                         F.explode(udf_cover_cells(res)(F.col(wkb_col))))
+    semantics of gridIdMapper; consumers dedupe on (id, tile) pairs).
+    The tiles are the spatial join's region cover (``join.region_cover``):
+    a world-spanning footprint covers every tile, a null or empty one
+    gets the reserved tile -1."""
+    from geomesa_spark.operators.join import udf_region_cover
+    cover = udf_region_cover(res)(F.col(wkb_col))
+    return df.withColumn(tile_col, F.explode(cover["cells"]["cell"]))
 
 
 def image_features(images: DataFrame) -> DataFrame:

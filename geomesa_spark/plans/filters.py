@@ -23,7 +23,8 @@ so pruning only ever over-selects (the engine's exactness rule).
 Rectangular spatial predicates refine with native lon/lat comparisons
 (whole-stage codegen, sargable — subsuming the reference's loose-bbox
 fast path with exact semantics); non-rectangular geometries refine with
-the vectorized point-location kernel shared with the spatial join.
+the vectorized point-location kernel of ``geo.predicates``, shared with
+the spatial join and the ST_* predicates.
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ from pyspark.sql.types import BooleanType
 
 from geomesa_spark.cells import PARTITION_RES
 from geomesa_spark.cells.z3 import WEEK_SECONDS
+from geomesa_spark.geo import predicates as gp
 from geomesa_spark.geo.model import Geometry, Polygon
 from geomesa_spark.plans.planner import DEFAULT_MAX_COVER, \
     cell_cover_of_geometry
@@ -205,54 +207,16 @@ def _weeks(f) -> set[int] | None:
 
 # --------------------------------------------------------- residual refine
 
-def _as_rect(geom: Geometry):
-    """(x0, y0, x1, y1) when ``geom`` is a proper axis-aligned rectangle,
-    else None. Delegates to the spatial join's ``_is_axis_rect`` — ONE
-    classifier guards every rect fast path: the vertex-SET check this
-    used to apply admitted a self-intersecting "bowtie" traversal of the
-    four corners, whose interior is two triangles, not the envelope
-    (the exact same defect fixed in the join in round 5, batch 1)."""
-    from geomesa_spark.operators.join import _is_axis_rect
-    return geom.bounds() if _is_axis_rect(geom) else None
-
-
-def _rect_column(op: str, rect, lon: Column, lat: Column) -> Column:
-    x0, y0, x1, y1 = rect
-    inside = (lon > x0) & (lon < x1) & (lat > y0) & (lat < y1)
-    onb = ((((lon == x0) | (lon == x1)) & (lat >= y0) & (lat <= y1))
-           | (((lat == y0) | (lat == y1)) & (lon >= x0) & (lon <= x1)))
-    if op in ("contains", "within"):
-        return inside
-    if op in ("covers", "intersects"):
-        return inside | onb
-    if op == "disjoint":
-        return ~(inside | onb)
-    if op == "touches":
-        return onb
-    raise ValueError(f"unknown spatial op {op!r}")
-
-
 def _geom_udf(op: str, geom: Geometry):
     from geomesa_spark.geo import io as gio
-    from geomesa_spark.operators.join import locate_points_in_geometry
     blob = gio.to_wkb(geom)
 
     @F.pandas_udf(BooleanType())
     def pred(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        g = gio.from_wkb(blob)
-        loc = locate_points_in_geometry(lon.to_numpy(np.float64),
-                                        lat.to_numpy(np.float64), g)
-        if op in ("contains", "within"):
-            res = loc == 1
-        elif op in ("covers", "intersects"):
-            res = loc >= 0
-        elif op == "disjoint":
-            res = loc == -1
-        elif op == "touches":
-            res = loc == 0
-        else:
-            raise ValueError(f"unknown spatial op {op!r}")
-        return pd.Series(res)
+        loc = gp.locate_points_in_geometry(lon.to_numpy(np.float64),
+                                           lat.to_numpy(np.float64),
+                                           gio.from_wkb(blob))
+        return pd.Series(gp.accepts_locations(op, loc))
     return pred
 
 
@@ -271,13 +235,14 @@ def to_refine_column(f, *, lon: str = "lon", lat: str = "lat",
     positions never loosen (dropping a refine under NOT would
     under-select)."""
     if isinstance(f, Spatial):
-        rect = _as_rect(f.geom)
+        if f.op not in gp.POINT_LOCATIONS:
+            raise ValueError(f"unknown spatial op {f.op!r}")
         lo_c, la_c = F.col(lon), F.col(lat)
-        if rect is not None:
+        if gp._is_axis_rect(f.geom):
             if loose_bbox and _positive and f.op in (
                     "intersects", "covers", "contains", "within"):
                 return F.lit(True)
-            return _rect_column(f.op, rect, lo_c, la_c)
+            return gp.rect_column(f.op, *f.geom.bounds(), lo_c, la_c)
         return _geom_udf(f.op, f.geom)(lo_c, la_c)
     if isinstance(f, Time):
         t = F.col(ts).cast("timestamp").cast("double")

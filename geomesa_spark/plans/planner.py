@@ -25,6 +25,7 @@ from geomesa_spark.cells import PARTITION_RES, bbox_cover, cell_bounds
 from geomesa_spark.geo.model import Geometry, Polygon, flatten
 from geomesa_spark.geo.predicates import disjoint as geo_disjoint
 from geomesa_spark.geo.predicates import intersects as geo_intersects
+from geomesa_spark.geo.predicates import locate_points_in_geometry
 
 _WORLD_BOUNDS = (-180.0, -90.0, 180.0, 90.0)
 DEFAULT_MAX_COVER = 4096  # range budget, analog of ScanRangesTarget
@@ -142,7 +143,6 @@ def cell_cover_classified(geom: Geometry, res: int = PARTITION_RES,
     if edges is None:
         return cover, interior
     x0s, y0s, x1s, y1s = cell_bounds(cover, res)
-    from geomesa_spark.operators.join import locate_points_in_geometry
     loc = locate_points_in_geometry(
         (np.asarray(x0s, dtype=np.float64) + np.asarray(x1s)) / 2.0,
         (np.asarray(y0s, dtype=np.float64) + np.asarray(y1s)) / 2.0, geom)

@@ -223,14 +223,9 @@ def plan_with_strategy(spark: SparkSession, df: DataFrame, f, *,
     with the FULL filter; otherwise fall through to the cell/week
     planner. A wrong cost estimate can only cost time — the exact refine
     always re-applies the whole filter."""
-    tiered = set()
-    if attr_indexes:
-        for col, p in attr_indexes.items():
-            try:  # schema-only read (parquet footer)
-                if "epoch_week" in spark.read.parquet(p).columns:
-                    tiered.add(col)
-            except Exception:
-                pass
+    # schema-only read (parquet footer); an unreadable index raises
+    tiered = {col for col, p in (attr_indexes or {}).items()
+              if "epoch_week" in spark.read.parquet(p).columns}
     s = decide(f, stats, res=res, allow_full_scan=allow_full_scan,
                tiered_attrs=tiered, id_col=id_col)
     if s.kind == "id":

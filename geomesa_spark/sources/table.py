@@ -238,12 +238,16 @@ def table_history(spark: SparkSession, path: str) -> DataFrame:
 
 
 def lineage_df(spark: SparkSession, path: str) -> DataFrame:
-    """Per-(chunk, cell) lineage/metrics: the progress + audit table."""
-    try:
-        return spark.read.parquet(f"{path}/{LINEAGE_DIR}")
-    except Exception:
+    """Per-(chunk, cell) lineage/metrics: the progress + audit table.
+    Empty when nothing is committed yet (no lineage directory); an
+    unreadable lineage raises rather than reading as "nothing committed",
+    which would re-ingest every chunk."""
+    lin = f"{path}/{LINEAGE_DIR}"
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(lin)
+    if not hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath):
         return spark.createDataFrame(
             [], "chunk_id long, cell_prefix long, n_rows long, bytes long")
+    return spark.read.parquet(lin)
 
 
 def completed_chunks(spark: SparkSession, path: str) -> set[int]:

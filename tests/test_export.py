@@ -66,7 +66,7 @@ class TestConvexHull:
     def test_hull_contains_all_points(self, spark, pts):
         from geomesa_spark.geo import from_wkt
         from geomesa_spark.operators.export import convex_hull_agg
-        from geomesa_spark.operators.join import locate_points_in_geometry
+        from geomesa_spark.geo.predicates import locate_points_in_geometry
         out = convex_hull_agg(pts).collect()
         assert len(out) == 1
         hull = from_wkt(out[0]["hull_wkt"])

@@ -101,10 +101,10 @@ class TestRefine:
         refine through the exact kernel, not the envelope comparisons
         (same defect class as the join's `_is_axis_rect` bowtie fix)."""
         from geomesa_spark.geo.model import Polygon
-        from geomesa_spark.plans.filters import _as_rect
+        from geomesa_spark.geo.predicates import _is_axis_rect
         bow = Polygon([[0.0, 0.0], [10.0, 10.0], [10.0, 0.0],
                        [0.0, 10.0], [0.0, 0.0]])
-        assert _as_rect(bow) is None
+        assert not _is_axis_rect(bow)
         got = {r["id"] for r in pts.where(
             to_refine_column(Spatial(bow, "intersects"))).collect()}
         env = {r["id"] for r in pts.where(

@@ -152,7 +152,7 @@ class TestClassifiedCover:
 
         from geomesa_spark.cells.z2 import cell_bounds
         from geomesa_spark.geo.model import Polygon
-        from geomesa_spark.operators.join import locate_points_in_geometry
+        from geomesa_spark.geo.predicates import locate_points_in_geometry
         from geomesa_spark.plans.planner import cell_cover_classified
 
         # concave polygon with a diagonal edge crossing many res-6 cells

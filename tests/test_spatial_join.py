@@ -3,15 +3,14 @@ cartesian result — the reference's own oracle pattern
 (SparkSQLDataTest.scala:298-352, seeded generators SparkSQLTestUtils.scala:
 36-37,93-112)."""
 
+import re
+
 import numpy as np
 import pytest
 
 from geomesa_spark.geo import Point, Polygon, to_wkb
-from geomesa_spark.operators.join import (
-    locate_points_in_geometry,
-    spatial_join,
-    spatial_join_pairs,
-)
+from geomesa_spark.geo.predicates import locate_points_in_geometry
+from geomesa_spark.operators.join import spatial_join, spatial_join_pairs
 
 RNG = np.random.default_rng(0)
 N_POINTS = 400
@@ -319,7 +318,7 @@ class TestRectFastPath:
         # corners has the same vertex SET as the rectangle but a totally
         # different interior — it must NOT take the rect fast path, and
         # the broadcast plan must agree with the distributed plan
-        from geomesa_spark.operators.join import _is_axis_rect
+        from geomesa_spark.geo.predicates import _is_axis_rect
         bow = Polygon([[0, 0], [10, 10], [10, 0], [0, 10], [0, 0]])
         assert not _is_axis_rect(bow)
         assert _is_axis_rect(box_poly(0.0, 0.0, 10.0, 10.0))
@@ -338,3 +337,90 @@ class TestRectFastPath:
         # engine-defined (as in JTS) — the contract asserted here is
         # that the broadcast plan routes through the SAME refine as the
         # distributed plan instead of folding to envelope comparisons.
+
+
+class TestWholeWorldCovers:
+    """Regions whose scan cover is None — world-spanning, or past the
+    range budget at the join resolution — still join: they explode to
+    their envelope's full bbox cover and the exact refine decides."""
+
+    WORLD = box_poly(-180.0, -90.0, 180.0, 90.0)
+    TRI = Polygon([[-180.0, -90.0], [180.0, -90.0], [-180.0, 90.0],
+                   [-180.0, -90.0]])
+    # over the 4096-cell budget at res 8 (cell_cover_of_geometry -> None)
+    WIDE = box_poly(-150.0, -70.0, 150.0, 80.0)
+
+    XS = np.concatenate([LON, [10.0, -100.0]])
+    YS = np.concatenate([LAT, [10.0, -50.0]])
+
+    def _both_paths(self, spark, regions, res):
+        from geomesa_spark.geo import predicates as gp
+        pts = spark.createDataFrame(
+            [(i, float(x), float(y)) for i, (x, y) in
+             enumerate(zip(self.XS, self.YS))],
+            "point_id int, lon double, lat double")
+        regs = spark.createDataFrame(
+            [(rid, bytearray(to_wkb(g))) for rid, g in regions],
+            "region_id string, geom binary")
+        for pred, locs in (("st_contains", "I"), ("st_intersects", "IB")):
+            want = {(i, rid) for rid, g in regions
+                    for i, (x, y) in enumerate(zip(self.XS, self.YS))
+                    if gp.locate(g, float(x), float(y)) in locs}
+            for bc in (True, None):
+                got = {(r.point_id, r.region_id) for r in spatial_join(
+                    pts, regs, predicate=pred, res=res,
+                    broadcast_regions=bc).collect()}
+                assert got == want, (pred, bc)
+
+    def test_world_box_joins_every_point(self, spark):
+        self._both_paths(spark, [("W", self.WORLD)], res=4)
+
+    def test_world_spanning_triangle(self, spark):
+        self._both_paths(spark, [("T", self.TRI)], res=4)
+
+    def test_over_budget_box_at_res8(self, spark):
+        from geomesa_spark.plans.planner import cell_cover_of_geometry
+        assert cell_cover_of_geometry(self.WIDE, res=8) is None
+        self._both_paths(spark, [("B", self.WIDE)], res=8)
+
+    def test_pairs_world_box(self, spark):
+        from geomesa_spark.geo import predicates as gp
+        lefts = [("W", self.WORLD), ("T", self.TRI)]
+        rights = [("a", box_poly(0.0, 0.0, 1.0, 1.0)),
+                  ("b", box_poly(100.0, 60.0, 101.0, 61.0))]
+        lf = spark.createDataFrame(
+            [(i, bytearray(to_wkb(g))) for i, g in lefts],
+            "left_id string, geom binary")
+        rf = spark.createDataFrame(
+            [(i, bytearray(to_wkb(g))) for i, g in rights],
+            "right_id string, geom_r binary")
+        got = {(r.left_id, r.right_id) for r in spatial_join_pairs(
+            lf, rf, predicate="st_intersects").collect()}
+        want = {(li, ri) for li, lg in lefts for ri, rg in rights
+                if gp.intersects(lg, rg)}
+        assert got == want and ("W", "a") in want
+
+    def test_footprint_world_box_covers_every_tile(self, spark):
+        from geomesa_spark.operators.tiles import assign_tiles_footprint
+        df = spark.createDataFrame([(bytearray(to_wkb(self.WORLD)),)],
+                                   "geom binary")
+        tiles = sorted(r.tile for r in
+                       assign_tiles_footprint(df, res=3).collect())
+        assert tiles == list(range(4 ** 3))
+
+
+def test_distributed_plan_has_envelope_prefilter(spark):
+    """The distributed path carries the same envelope columns as the
+    broadcast path, so the codegen envelope test sits in the join
+    condition ahead of the Python refine, and the cover UDF runs once."""
+    pts = spark.createDataFrame([(1, 5.0, 5.0)], "id int, lon double, lat double")
+    tri = Polygon([[0, 0], [10, 0], [0, 10], [0, 0]])
+    regs = spark.createDataFrame([("T", bytearray(to_wkb(tri)))],
+                                 "region_id string, geom binary")
+    out = spatial_join(pts, regs, predicate="st_contains",
+                       broadcast_regions=False)
+    plan = re.sub(r"#\d+L?", "",
+                  out._jdf.queryExecution().executedPlan().toString())
+    join_line = next(ln for ln in plan.splitlines() if "Join [" in ln)
+    assert "(lon >= __xmin__" in join_line and "(lat <= __ymax__" in join_line
+    assert plan.count("ArrowEvalPython [cover(") == 1

@@ -140,6 +140,25 @@ class TestPlanWithStrategy:
         want2 = {r["id"] for r in plan_query(df, f2).collect()}
         assert got2 == want2
 
+    def test_unreadable_attr_index_raises(self, spark, tmp_path):
+        """The attribute-index schema read fails loudly: a missing index
+        must not plan as "no time tier", even when the decider picks
+        the spatial route and never touches the index."""
+        from pyspark.errors import AnalysisException
+
+        from geomesa_spark.cells import PARTITION_RES
+        from geomesa_spark.cells.native import cell_expr
+        from geomesa_spark.plans.strategy import plan_with_strategy
+        df = spark.createDataFrame(
+            [(1, 7, 0.5, 0.5)], "id long, user long, lon double, lat double") \
+            .withColumn("cell_prefix", cell_expr("lon", "lat", PARTITION_RES))
+        f = and_(bbox(-1.0, -1.0, 1.0, 1.0), Attr("user", ">", 0))
+        stats = {"rows": 1000, "cardinality": {"user": 2}}
+        assert decide(f, stats).kind == "spatial"
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            plan_with_strategy(spark, df, f, stats=stats,
+                               attr_indexes={"user": str(tmp_path / "nope")})
+
 
 class TestTieredAttributeIndex:
     def test_attr_plus_time_beats_single_dimensions(self):

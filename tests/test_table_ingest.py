@@ -295,3 +295,16 @@ class TestReadBalanced:
             .toString().split("\n")[0] + \
             df._jdf.queryExecution().toString()
         assert df.count() == 1000
+
+
+def test_unreadable_lineage_raises(spark, tmp_path):
+    """A lineage directory that cannot be read fails loudly instead of
+    reading as "nothing committed" (which re-ingests every chunk); only
+    a missing lineage directory means an empty lineage."""
+    path = str(tmp_path / "images")
+    assert completed_chunks(spark, path) == set()
+    os.makedirs(os.path.join(path, "_lineage"))
+    with open(os.path.join(path, "_lineage", "part-0.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        completed_chunks(spark, path)
