@@ -265,6 +265,50 @@ def locate_points_in_geometry(x: np.ndarray, y: np.ndarray, geom) -> np.ndarray:
     return out
 
 
+def locate_rects_in_geometry(x0: np.ndarray, y0: np.ndarray,
+                             x1: np.ndarray, y1: np.ndarray,
+                             geom) -> np.ndarray:
+    """Vectorized cell-vs-geometry test of many closed rectangles
+    ``[x0, x1] x [y0, y1]`` against one geometry.
+
+    Returns int8 array: 1 interior (every point of the closed rectangle
+    locates 'I'), 0 touching (the rectangle meets a ring edge, a line
+    segment or a point), -1 exterior. ``>= 0`` is exactly closed-set
+    ``intersects`` for every geometry type: a rectangle that meets no
+    primitive lies wholly inside or wholly outside each polygon part, so
+    its centre decides. Points enter as zero-length segments."""
+    x0, y0, x1, y1 = (np.asarray(v, dtype=np.float64) for v in (x0, y0, x1, y1))
+    chains = _linework(geom)
+    pts = np.asarray(_points_of(geom), dtype=np.float64).reshape(-1, 2)
+    a = np.concatenate([c[:-1] for c in chains] + [pts])
+    b = np.concatenate([c[1:] for c in chains] + [pts])
+    touch = np.zeros(len(x0), dtype=bool)
+    for s in range(0, len(a), 512):  # segment-chunk to bound memory
+        ax, ay, bx, by = a[s:s + 512, 0], a[s:s + 512, 1], \
+            b[s:s + 512, 0], b[s:s + 512, 1]
+        # segment bbox overlaps the closed rectangle ...
+        i, j = np.nonzero((np.maximum(ax, bx) >= x0[:, None])
+                          & (np.minimum(ax, bx) <= x1[:, None])
+                          & (np.maximum(ay, by) >= y0[:, None])
+                          & (np.minimum(ay, by) <= y1[:, None]))
+        # ... and no rectangle corner lies strictly on one side of it
+        ax, ay, dx, dy = ax[j], ay[j], bx[j] - ax[j], by[j] - ay[j]
+        allpos = np.ones(len(i), dtype=bool)
+        allneg = np.ones(len(i), dtype=bool)
+        for cx, cy in ((x0, y0), (x1, y0), (x1, y1), (x0, y1)):
+            cr = dx * (cy[i] - ay) - dy * (cx[i] - ax)
+            allpos &= cr > 0
+            allneg &= cr < 0
+        touch[i[~(allpos | allneg)]] = True
+    out = np.where(touch, np.int8(0), np.int8(-1))
+    free = np.flatnonzero(~touch)
+    cx, cy = (x0[free] + x1[free]) / 2.0, (y0[free] + y1[free]) / 2.0
+    for part in flatten(geom):
+        if isinstance(part, Polygon) and not part.is_empty():
+            out[free[locate_points_in_geometry(cx, cy, part) == 1]] = 1
+    return out
+
+
 def _is_axis_rect(g) -> bool:
     """True iff ``g`` is a non-degenerate axis-aligned rectangle — a
     single-ring polygon whose ring is exactly its envelope. For such

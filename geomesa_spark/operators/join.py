@@ -51,11 +51,12 @@ _ENV = ("xmin", "ymin", "xmax", "ymax")
 @functools.lru_cache(maxsize=65536)
 def region_cover(wkb: bytes | None, res: int) -> tuple:
     """The join cover of one region WKB at ``res``: ``(cells, envelope,
-    rect)``. ``cells`` is a non-empty tuple of ``(cell, interior)``; a
-    point joined through an INTERIOR cell is provably in the region's
-    interior (``cell_cover_classified``), so the exact refine is skipped
-    for it — the reference's contained-range shortcut applied to the
-    join. ``envelope`` is ``(xmin, ymin, xmax, ymax)`` and ``rect`` says
+    rect)``. ``cells`` is a non-empty tuple of ``(cell, interior)``
+    from ``cell_cover_classified``, the planner's one Z2 cover: a point
+    joined through an INTERIOR cell is provably in the region's interior
+    (``geo.predicates.locate_rects_in_geometry``), so the exact refine
+    is skipped for it — the reference's contained-range shortcut applied
+    to the join. ``envelope`` is ``(xmin, ymin, xmax, ymax)`` and ``rect`` says
     whether the region is an axis-aligned rectangle (``_is_axis_rect``).
 
     Regions whose scan cover is None — world-spanning, or past the
@@ -63,7 +64,7 @@ def region_cover(wkb: bytes | None, res: int) -> tuple:
     explode — take the envelope's full bbox cover at ``res``, all
     boundary cells. Null and empty regions get the reserved cell -1.
     Cached per (WKB, res): region frames are static across queries, so
-    the per-geometry cover (~4 ms) is computed once per process."""
+    the per-geometry cover (~1 ms) is computed once per process."""
     if wkb is None:  # matches nothing either way: keeps the rect path
         return ((-1, False),), (None,) * 4, True
     g = gio.from_wkb(wkb)
@@ -451,8 +452,13 @@ def _pair_candidates(left: DataFrame, right: DataFrame, *,
     rf = _explode_cover(right, right_geom, res, tag="r")
     if broadcast_right:
         rf = F.broadcast(rf)
+    # the isNull arms keep Catalyst from inferring not-null filters on
+    # the envelopes, which it would push below each explode as a second
+    # cover-UDF evaluation (as in spatial_join); null geometries still
+    # fail the refine
     cond = (F.col("__lcell__") == F.col("__rcell__")) \
-        & _pair_bbox_condition(predicate)
+        & (F.col("__lxmin__").isNull() | F.col("__rxmin__").isNull()
+           | _pair_bbox_condition(predicate))
     return lf.join(rf, on=cond, how="inner")
 
 

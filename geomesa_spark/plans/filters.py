@@ -42,7 +42,7 @@ from geomesa_spark.cells.z3 import WEEK_SECONDS
 from geomesa_spark.geo import predicates as gp
 from geomesa_spark.geo.model import Geometry, Polygon
 from geomesa_spark.plans.planner import DEFAULT_MAX_COVER, \
-    cell_cover_of_geometry
+    cell_cover_of_geometry, partition_filter
 
 # ---------------------------------------------------------------- filter AST
 
@@ -308,16 +308,8 @@ def plan_query(df: DataFrame, f, *, cell_col: str = "cell_prefix",
         raise ValueError(
             "filter has no prunable constraint; pass allow_full_scan=True "
             "to permit a full-table scan")
-    out = df
-    if cover is not None:
-        if len(cover) == 0:
-            return out.where(F.lit(False))  # disjoint short-circuit
-        out = out.where(F.col(cell_col).isin(
-            [int(c) for c in cover.tolist()]))
-    if week_col and weeks is not None:
-        if not weeks:
-            return out.where(F.lit(False))
-        out = out.where(F.col(week_col).isin(sorted(weeks)))
+    out = partition_filter(partition_filter(df, cell_col, cover),
+                           week_col, weeks)
     return out.where(to_refine_column(f, lon=lon, lat=lat, ts=ts,
                                       loose_bbox=loose_bbox))
 

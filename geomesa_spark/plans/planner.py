@@ -9,6 +9,14 @@ parquet partition pruning handles natively. The exact predicate then refines
 the over-selecting cover downstream (strict-bbox semantics,
 Z2IndexKeySpace.useFullFilter:126-138).
 
+One function computes every Z2 cover, ``cell_cover_classified``: the bbox
+cover's cell rectangles go through one vectorized cell-vs-geometry kernel
+(``geo.predicates.locate_rects_in_geometry``), which yields the
+reference's two range classes at once (Z2IndexKeySpace.getRangeBytes:
+89-104) — interior cells, contained ranges whose rows skip the exact
+filter, and boundary cells, intersecting ranges that keep it. Exterior
+cells are dropped.
+
 Short-circuits mirrored from the reference (Z2IndexKeySpace.scala:84-87,
 FilterHelper.isFilterWholeWorld:44-51):
 - query disjoint from the world -> empty scan,
@@ -19,36 +27,36 @@ FilterHelper.isFilterWholeWorld:44-51):
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from geomesa_spark.cells import PARTITION_RES, bbox_cover, cell_bounds
-from geomesa_spark.geo.model import Geometry, Polygon, flatten
-from geomesa_spark.geo.predicates import disjoint as geo_disjoint
-from geomesa_spark.geo.predicates import intersects as geo_intersects
-from geomesa_spark.geo.predicates import locate_points_in_geometry
+from geomesa_spark.geo.model import Geometry
+from geomesa_spark.geo.predicates import locate_rects_in_geometry
 
 _WORLD_BOUNDS = (-180.0, -90.0, 180.0, 90.0)
 DEFAULT_MAX_COVER = 4096  # range budget, analog of ScanRangesTarget
 
 
-def cell_cover_of_geometry(geom: Geometry, res: int = PARTITION_RES,
-                           max_cells: int = DEFAULT_MAX_COVER,
-                           exact: bool = True) -> np.ndarray | None:
-    """Cells at ``res`` overlapping ``geom``; None means "whole world, do
-    not filter". Over-selects, never under-selects.
+def cell_cover_classified(geom: Geometry, res: int = PARTITION_RES,
+                          max_cells: int = DEFAULT_MAX_COVER
+                          ) -> tuple[np.ndarray | None, np.ndarray | None]:
+    """Cells at ``res`` whose closed rectangle intersects ``geom``, split
+    into INTERIOR cells (every point of the rectangle locates 'I': no
+    exact refine needed) and boundary cells — the reference's contained
+    vs intersecting ranges (Z2IndexKeySpace.getRangeBytes). Tighter than
+    the bbox cover for polygons and lines (GeometryUtils.bounds +
+    Z2IndexKeySpace:89-95); over-selects, never under-selects.
 
-    ``exact``: drop cover cells whose rectangle does not intersect the
-    geometry (tighter than bbox for polygons — the XZ/polygon-decomposition
-    trick of the reference, GeometryUtils.bounds + Z2IndexKeySpace:89-95).
-    """
+    Returns (cells, interior_mask); (None, None) means "whole world, do
+    not filter", empty cells mean disjoint."""
     if geom is None or geom.is_empty():
-        return np.empty(0, dtype=np.int64)  # disjoint short-circuit
+        return np.empty(0, dtype=np.int64), np.zeros(0, dtype=bool)
     x0, y0, x1, y1 = geom.bounds()
     if not np.isfinite(x0):
-        return np.empty(0, dtype=np.int64)
+        return np.empty(0, dtype=np.int64), np.zeros(0, dtype=bool)
     if (x0 <= _WORLD_BOUNDS[0] and y0 <= _WORLD_BOUNDS[1]
             and x1 >= _WORLD_BOUNDS[2] and y1 >= _WORLD_BOUNDS[3]):
-        return None  # whole-world: scan everything
+        return None, None  # whole-world: scan everything
     use_res = res
     while True:
         try:
@@ -57,7 +65,7 @@ def cell_cover_of_geometry(geom: Geometry, res: int = PARTITION_RES,
         except ValueError:
             use_res -= 1  # coarsen instead of failing (budget semantics)
             if use_res < 0:
-                return None
+                return None, None
     if use_res != res:
         # caller's partition column is at ``res``; recompute at res from
         # the coarse cells' bounds (still a valid over-selection). The
@@ -67,91 +75,33 @@ def cell_cover_of_geometry(geom: Geometry, res: int = PARTITION_RES,
         # than scanning + exact refine — return None (no prune) instead
         # of defeating the ScanRangesTarget budget the ValueError enforces.
         if len(cover) << (2 * (res - use_res)) > 4 * max_cells:
-            return None
+            return None, None
         lo0, la0, lo1, la1 = cell_bounds(cover, use_res)
         cover = np.unique(np.concatenate([
             bbox_cover(a, b, c, d, res=res, max_cells=1 << 31)
             for a, b, c, d in zip(lo0, la0, lo1, la1)]))
-    if exact and len(cover) > 1:
-        keep = []
-        for c in cover.tolist():
-            cx0, cy0, cx1, cy1 = (float(v[0]) for v in cell_bounds(np.asarray([c]), res))
-            cellpoly = Polygon([[cx0, cy0], [cx1, cy0], [cx1, cy1], [cx0, cy1],
-                                [cx0, cy0]])
-            if geo_intersects(cellpoly, geom):
-                keep.append(c)
-        cover = np.asarray(keep, dtype=np.int64)
-    return cover
+    loc = locate_rects_in_geometry(*cell_bounds(cover, res), geom)
+    return cover[loc >= 0], loc[loc >= 0] == 1
 
 
-def _polygon_edges(geom: Geometry):
-    """All ring edges of every polygon part as flat arrays, or None if the
-    geometry has any non-polygon part (callers fall back conservative)."""
-    axs, ays, bxs, bys = [], [], [], []
-    for part in flatten(geom):
-        if not isinstance(part, Polygon):
-            return None
-        if part.is_empty():
-            continue
-        for ring in part.rings():
-            axs.append(ring[:-1, 0]); ays.append(ring[:-1, 1])
-            bxs.append(ring[1:, 0]); bys.append(ring[1:, 1])
-    if not axs:
-        return None
-    return (np.concatenate(axs), np.concatenate(ays),
-            np.concatenate(bxs), np.concatenate(bys))
+def cell_cover_of_geometry(geom: Geometry, res: int = PARTITION_RES,
+                           max_cells: int = DEFAULT_MAX_COVER
+                           ) -> np.ndarray | None:
+    """The cells of ``cell_cover_classified``; None means "whole world,
+    do not filter"."""
+    return cell_cover_classified(geom, res=res, max_cells=max_cells)[0]
 
 
-def _any_edge_hits_rect(edges, rx0: float, ry0: float,
-                        rx1: float, ry1: float) -> bool:
-    """True if any edge segment touches the closed rectangle (exact:
-    bbox-overlap + corner side test — no corner strictly one side)."""
-    ax, ay, bx, by = edges
-    ov = ((np.maximum(ax, bx) >= rx0) & (np.minimum(ax, bx) <= rx1)
-          & (np.maximum(ay, by) >= ry0) & (np.minimum(ay, by) <= ry1))
-    if not ov.any():
-        return False
-    ax, ay, bx, by = ax[ov], ay[ov], bx[ov], by[ov]
-    dx, dy = bx - ax, by - ay
-    allpos = np.ones(len(ax), dtype=bool)
-    allneg = np.ones(len(ax), dtype=bool)
-    for cx, cy in ((rx0, ry0), (rx1, ry0), (rx1, ry1), (rx0, ry1)):
-        cr = dx * (cy - ay) - dy * (cx - ax)
-        allpos &= cr > 0
-        allneg &= cr < 0
-    return bool((~(allpos | allneg)).any())
-
-
-def cell_cover_classified(geom: Geometry, res: int = PARTITION_RES,
-                          max_cells: int = DEFAULT_MAX_COVER
-                          ) -> tuple[np.ndarray | None, np.ndarray | None]:
-    """Cover cells split into INTERIOR (cell rectangle strictly inside the
-    geometry's interior — every point in it locates 'I', no exact refine
-    needed) vs boundary cells. The reference's contained-vs-intersecting
-    range distinction (Z2IndexKeySpace.getRangeBytes contained ranges /
-    XZ query windows), which lets scans skip per-row predicate evaluation
-    for fully-covered ranges.
-
-    Returns (cells, interior_mask); interior_mask is None when cells is
-    None (whole world) and all-False when the geometry has non-polygon
-    parts (conservative)."""
-    cover = cell_cover_of_geometry(geom, res=res, max_cells=max_cells)
-    if cover is None or len(cover) == 0:
-        return cover, None if cover is None else np.zeros(0, dtype=bool)
-    interior = np.zeros(len(cover), dtype=bool)
-    edges = _polygon_edges(geom)
-    if edges is None:
-        return cover, interior
-    x0s, y0s, x1s, y1s = cell_bounds(cover, res)
-    loc = locate_points_in_geometry(
-        (np.asarray(x0s, dtype=np.float64) + np.asarray(x1s)) / 2.0,
-        (np.asarray(y0s, dtype=np.float64) + np.asarray(y1s)) / 2.0, geom)
-    for i in range(len(cover)):
-        if loc[i] == 1 and not _any_edge_hits_rect(
-                edges, float(x0s[i]), float(y0s[i]),
-                float(x1s[i]), float(y1s[i])):
-            interior[i] = True
-    return cover, interior
+def partition_filter(df: DataFrame, col: str, values) -> DataFrame:
+    """``df`` restricted to the partition values ``values`` of ``col``
+    (a cell cover or an epoch-week set): None adds no filter, an empty
+    set matches nothing, else an IN-list Catalyst turns into partition
+    pruning."""
+    if values is None:
+        return df
+    if len(values) == 0:
+        return df.where(F.lit(False))
+    return df.where(F.col(col).isin(sorted(int(v) for v in values)))
 
 
 def prune_by_geometry(df: DataFrame, geom: Geometry, cell_col: str = "cell_prefix",
@@ -163,12 +113,8 @@ def prune_by_geometry(df: DataFrame, geom: Geometry, cell_col: str = "cell_prefi
     the IN-list into partition pruning (the FS datastore's
     getIntersectingPartitions, SpatialScheme.scala:43-59).
     """
-    cover = cell_cover_of_geometry(geom, res=res, max_cells=max_cells)
-    if cover is None:
-        return df
-    if len(cover) == 0:
-        return df.where(F.lit(False))
-    return df.where(F.col(cell_col).isin([int(c) for c in cover.tolist()]))
+    return partition_filter(
+        df, cell_col, cell_cover_of_geometry(geom, res=res, max_cells=max_cells))
 
 
 def query_guard(geom: Geometry | None, *, allow_full_scan: bool = False) -> None:

@@ -157,52 +157,45 @@ class Strategy:
     attribute: str | None = None
 
 
+def _positive_attrs(f):
+    """The positive ``Attr`` leaves of ``f`` reachable through ``And``,
+    in order. After ``_push_not`` a ``Not`` wraps only a leaf, which
+    never bounds the scan; nor does an ``Or`` branch on its own."""
+    def visit(node):
+        if isinstance(node, FL.Attr):
+            yield node
+        elif isinstance(node, FL.And):
+            for p in node.parts:
+                yield from visit(p)
+    return visit(FL._push_not(f))
+
+
 def _attr_fraction(f, cardinality: dict) -> dict[str, float]:
     """Per-attribute selectivity fraction of the AND-reachable attribute
     predicates (OR branches don't bound the scan)."""
     out: dict[str, float] = {}
-
-    def visit(node, positive):
-        if isinstance(node, FL.Attr) and positive:
-            card = cardinality.get(node.column)
-            if not card:
-                return
-            if node.op == "=":
-                frac = 1.0 / card
-            elif node.op == "in":
-                frac = min(1.0, len(node.value) / card)
-            elif node.op in ("<", "<=", ">", ">="):
-                frac = RANGE_FRACTION
-            else:
-                return
-            out[node.column] = min(out.get(node.column, 1.0), frac)
-        elif isinstance(node, FL.And):
-            for p in node.parts:
-                visit(p, positive)
-        elif isinstance(node, FL.Not):
-            visit(node.part, not positive)
-        # Or: a disjunction's branches do not individually bound the scan
-    visit(FL._push_not(f), True)
+    for node in _positive_attrs(f):
+        card = cardinality.get(node.column)
+        if not card:
+            continue
+        if node.op == "=":
+            frac = 1.0 / card
+        elif node.op == "in":
+            frac = min(1.0, len(node.value) / card)
+        elif node.op in ("<", "<=", ">", ">="):
+            frac = RANGE_FRACTION
+        else:
+            continue
+        out[node.column] = min(out.get(node.column, 1.0), frac)
     return out
 
 
 def _first_attr_pred(f, column: str):
     """The AND-reachable predicate on ``column`` usable against the
     secondary index (equality/IN/range), or None."""
-    def visit(node, positive):
-        if isinstance(node, FL.Attr) and positive \
-                and node.column == column \
-                and node.op in ("=", "in", "<", "<=", ">", ">="):
-            return node
-        if isinstance(node, FL.And):
-            for p in node.parts:
-                r = visit(p, positive)
-                if r is not None:
-                    return r
-        if isinstance(node, FL.Not):
-            return visit(node.part, not positive)
-        return None
-    return visit(FL._push_not(f), True)
+    return next((node for node in _positive_attrs(f)
+                 if node.column == column
+                 and node.op in ("=", "in", "<", "<=", ">", ">=")), None)
 
 
 def plan_with_strategy(spark: SparkSession, df: DataFrame, f, *,
@@ -325,16 +318,4 @@ def decide(f, stats: dict, *, res: int = PARTITION_RES,
 
 def _attr_columns(f) -> list[str]:
     """Columns of positive, AND-reachable attribute predicates."""
-    out: list[str] = []
-
-    def visit(node, positive):
-        if isinstance(node, FL.Attr) and positive \
-                and node.column not in out:
-            out.append(node.column)
-        elif isinstance(node, FL.And):
-            for p in node.parts:
-                visit(p, positive)
-        elif isinstance(node, FL.Not):
-            visit(node.part, not positive)
-    visit(FL._push_not(f), True)
-    return out
+    return list(dict.fromkeys(node.column for node in _positive_attrs(f)))

@@ -34,6 +34,7 @@ depths, which Spark's partition discovery rejects — re-ingest those."""
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 RESERVED_CELL = -1
@@ -198,8 +199,11 @@ def projected_scan(spark: SparkSession, path: str, columns: list[str],
         if row.key.startswith("spark.sql.") and row.value != "<undefined>":
             try:
                 child.conf.set(row.key, row.value)
-            except Exception:
-                pass  # static/read-only entries
+            except AnalysisException as e:
+                # static entries (spark.sql.warehouse.dir) are shared
+                # with the parent already; anything else is a real error
+                if e.getCondition() != "CANNOT_MODIFY_STATIC_CONFIG":
+                    raise
     child.conf.set("spark.sql.files.maxPartitionBytes", str(eff))
     # a narrow scan's open cost should scale with it, or tiny files
     # still fragment the splits
@@ -380,10 +384,9 @@ def spatiotemporal_scan(spark: SparkSession, path: str, *,
     """Partition-pruned scan: time interval -> epoch_week range filter,
     bbox -> cell_prefix cover filter; exact refine on (ts, lon, lat)
     stays with the caller (strict-filter semantics)."""
-    from geomesa_spark.cells import PARTITION_RES
     from geomesa_spark.cells.z3 import WEEK_SECONDS
     from geomesa_spark.geo.model import Polygon
-    from geomesa_spark.plans.planner import cell_cover_of_geometry
+    from geomesa_spark.plans.planner import prune_by_geometry
 
     df = spark.read.parquet(path)
     if t0 is not None or t1 is not None:
@@ -399,11 +402,6 @@ def spatiotemporal_scan(spark: SparkSession, path: str, *,
             df = df.where(F.col("epoch_week") <= week_of(t1))
     if bbox is not None:
         x0, y0, x1, y1 = bbox
-        poly = Polygon([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
-        cover = cell_cover_of_geometry(poly, res=PARTITION_RES)
-        if cover is not None:
-            if len(cover) == 0:
-                return df.where(F.lit(False))
-            df = df.where(F.col("cell_prefix").isin(
-                [int(c) for c in cover.tolist()]))
+        df = prune_by_geometry(df, Polygon(
+            [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]))
     return df

@@ -6,6 +6,9 @@ partial phases."""
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -193,3 +196,110 @@ class TestClassifiedCover:
         cov = spatial_join(pts, regions, predicate="st_covers",
                           broadcast_regions=True)
         assert sorted(r.id for r in cov.collect()) == [1, 2, 3]
+
+
+def _star(cx, cy, rx, ry, k=5):
+    ring = [(cx + (rx if i % 2 == 0 else rx / 2.5)
+             * math.cos(math.pi / 2 + i * math.pi / k),
+             cy + (ry if i % 2 == 0 else ry / 2.5)
+             * math.sin(math.pi / 2 + i * math.pi / k)) for i in range(2 * k)]
+    return ring + [ring[0]]
+
+
+def _cover_geometries():
+    from geomesa_spark.geo.model import (GeometryCollection, LineString,
+                                         MultiPoint, MultiPolygon, Point,
+                                         Polygon)
+    box = [[-80.0, -50.0], [80.0, -50.0], [80.0, 50.0], [-80.0, 50.0]]
+    return {
+        "concave": Polygon([[-60.0, -30.0], [60.0, -30.0], [60.0, 40.0],
+                            [0.0, 5.0], [-60.0, 40.0]]),
+        "holed": Polygon(box, [[[-50.0, -10.0], [0.0, -35.0], [55.0, 0.0],
+                                [10.0, 30.0]]]),
+        "multipolygon": MultiPolygon([
+            Polygon([[-100.0, -40.0], [-60.0, -40.0], [-80.0, -5.0]]),
+            Polygon(_star(60.0, 20.0, 25.0, 18.0))]),
+        "linestring": LineString([[-120.0, -60.0], [-30.0, 10.0],
+                                  [45.0, 11.25], [100.0, 70.0]]),
+        # corners and edges of res-4 and res-6 cells, and cell interiors
+        "multipoint": MultiPoint([Point(0.0, 0.0), Point(22.5, 11.25),
+                                  Point(5.625, 3.0), Point(-100.3, 40.1),
+                                  Point(-45.0, -2.8125)]),
+        "polygon+line": GeometryCollection([
+            Polygon(_star(-20.0, 0.0, 40.0, 30.0)),
+            LineString([[-90.0, -20.0], [50.0, 15.0]])]),
+        "cell_aligned": Polygon([[-45.0, -22.5], [45.0, -22.5],
+                                 [45.0, 22.5], [-45.0, 22.5]]),
+        "inside_one_cell": Polygon([[1.0, 0.5], [2.0, 0.5], [1.5, 1.5]]),
+        # the hole holds whole res-4 and res-6 cells
+        "cell_in_hole": Polygon(box, [[[-40.0, -20.0], [40.0, -20.0],
+                                       [40.0, 20.0], [-40.0, 20.0]]]),
+        "coarsened": Polygon(_star(30.0, 10.0, 14.0, 9.0)),
+    }
+
+
+def _de9im_cells(geom, res):
+    """The bbox-cover cells at ``res`` whose closed rectangle DE-9IM
+    ``intersects`` ``geom`` (the reference the kernel must match)."""
+    from geomesa_spark.cells import bbox_cover
+    from geomesa_spark.cells.z2 import cell_bounds
+    from geomesa_spark.geo.model import Polygon
+    from geomesa_spark.geo.predicates import intersects
+
+    bbox = bbox_cover(*geom.bounds(), res=res, max_cells=1 << 20)
+    x0, y0, x1, y1 = cell_bounds(bbox, res)
+    return bbox, [int(c) for c, a, b, cc, d in zip(bbox, x0, y0, x1, y1)
+                  if intersects(Polygon([[a, b], [cc, b], [cc, d], [a, d]]),
+                                geom)]
+
+
+class TestCoverKernel:
+    """``cell_cover_classified``'s one cell-vs-geometry kernel keeps
+    exactly the bbox-cover cells whose closed rectangle DE-9IM
+    ``intersects`` the geometry, for every geometry type; its interior
+    cells hold the closed-rect claim."""
+
+    @pytest.mark.parametrize("res", [4, 6])
+    @pytest.mark.parametrize("name", sorted(_cover_geometries()))
+    def test_cells_match_de9im(self, name, res):
+        from geomesa_spark.cells.z2 import cell_bounds
+        from geomesa_spark.geo.predicates import locate_points_in_geometry
+        from geomesa_spark.plans.planner import (DEFAULT_MAX_COVER,
+                                                 cell_cover_classified)
+
+        geom = _cover_geometries()[name]
+        bbox, want = _de9im_cells(geom, res)
+        max_cells = DEFAULT_MAX_COVER
+        if name == "coarsened":
+            max_cells = {4: 2, 6: 16}[res]
+            assert len(bbox) > max_cells  # the budget coarsens this cover
+        cells, interior = cell_cover_classified(geom, res=res,
+                                                max_cells=max_cells)
+        assert cells.tolist() == want
+        if name == "cell_in_hole":
+            assert len(want) < len(bbox)
+        if res == 6 and name in ("concave", "holed", "polygon+line",
+                                 "cell_in_hole"):
+            assert interior.any()
+        if name in ("linestring", "multipoint", "inside_one_cell"):
+            assert not interior.any()
+        # closed-rect claim: corners and random points of every interior
+        # cell locate 'I'
+        x0, y0, x1, y1 = cell_bounds(cells[interior], res)
+        rng = np.random.default_rng(7)
+        u, v = rng.uniform(size=(2, 20, 1))
+        u = np.concatenate([u, [[0.0], [1.0], [0.0], [1.0]]])
+        v = np.concatenate([v, [[0.0], [0.0], [1.0], [1.0]]])
+        xs, ys = (x0 + u * (x1 - x0)).ravel(), (y0 + v * (y1 - y0)).ravel()
+        assert (locate_points_in_geometry(xs, ys, geom) == 1).all()
+
+    def test_edges_past_one_segment_chunk(self):
+        """A 1100-gon spans three 512-segment chunks of the kernel."""
+        from geomesa_spark.geo.model import Polygon
+        from geomesa_spark.plans.planner import cell_cover_classified
+
+        t = np.linspace(0.0, 2 * math.pi, 1100, endpoint=False)
+        geom = Polygon(np.c_[20.0 + 30.0 * np.cos(t), -5.0 + 20.0 * np.sin(t)])
+        cells, interior = cell_cover_classified(geom, res=4)
+        assert cells.tolist() == _de9im_cells(geom, 4)[1]
+        assert interior.any()

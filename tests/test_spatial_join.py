@@ -424,3 +424,20 @@ def test_distributed_plan_has_envelope_prefilter(spark):
     join_line = next(ln for ln in plan.splitlines() if "Join [" in ln)
     assert "(lon >= __xmin__" in join_line and "(lat <= __ymax__" in join_line
     assert plan.count("ArrowEvalPython [cover(") == 1
+
+
+def test_pair_join_evaluates_each_cover_once(spark):
+    """``spatial_join_pairs`` runs each side's cover UDF once: the
+    isNull arms of its join condition keep Catalyst from pushing
+    inferred not-null envelope filters below the explodes as a second
+    cover evaluation. Null geometries still join nothing."""
+    tri = Polygon([[0, 0], [10, 0], [0, 10], [0, 0]])
+    lf = spark.createDataFrame([("a", bytearray(to_wkb(tri))), ("n", None)],
+                               "left_id string, geom binary")
+    rf = spark.createDataFrame([("b", bytearray(to_wkb(tri))), ("m", None)],
+                               "right_id string, geom_r binary")
+    out = spatial_join_pairs(lf, rf, predicate="st_intersects")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython [cover(") == 2
+    assert [tuple(r) for r in out.select("left_id", "right_id").collect()] \
+        == [("a", "b")]

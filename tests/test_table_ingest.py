@@ -258,6 +258,20 @@ class TestProjectedScan:
             spark, path).columns)
         assert full.sparkSession is spark
 
+    def test_derived_session_keeps_runtime_conf(self, spark, table):
+        """The derived session carries the caller's runtime SET entries,
+        unregistered keys such as catalog options included; the static
+        warehouse dir the copy cannot set is skipped, not an error."""
+        from geomesa_spark.sources.table import projected_scan
+        path, _ = table
+        spark.conf.set("spark.sql.catalog.t.k", "v")
+        try:
+            df = projected_scan(spark, path, ["lon", "lat"])
+        finally:
+            spark.conf.unset("spark.sql.catalog.t.k")
+        assert df.sparkSession is not spark  # the derived-session branch
+        assert df.sparkSession.conf.get("spark.sql.catalog.t.k") == "v"
+
     def test_cross_session_join(self, spark, table):
         """A projected scan joins cleanly with parent-session frames."""
         from geomesa_spark.sources.table import projected_scan
